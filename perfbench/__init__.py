@@ -1,0 +1,5 @@
+"""Seeded end-to-end benchmark of the streaming RAG pipeline.
+
+Run one workload with ``python3 perfbench/run.py --workload <name> --seed <n>
+--seconds <s> --trace <0|1>`` from the repository root; see ``run.py``.
+"""
