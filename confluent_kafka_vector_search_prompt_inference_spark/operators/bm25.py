@@ -94,29 +94,28 @@ def bm25_doc_stats_from_postings(
 ) -> DataFrame:
     """``(n, avgdl)`` derived from an already-persisted postings table —
     saving the SECOND full-corpus tokenize :func:`bm25_doc_stats` pays
-    (round 13, guide §5: the persisted index already carries ``dl``).
+    (the persisted index already carries every token).
 
-    Exactly equal to :func:`bm25_doc_stats`: ``word_tokens`` of any
-    non-null text is non-empty (``split('')`` is ``['']``), so every
-    non-null-text document has postings rows and its ``dl`` rides along
-    (the per-doc partial aggregate is map-side — postings are narrow
-    over the scan, each doc's rows colocated); null-text docs carry
-    ``dl = NULL`` in the standalone form (``size(NULL)`` is NULL, so
-    ``sum`` skips them while ``count(*)`` counts them) and are restored
-    here by a tokenizer-free ``isNull`` count. Same operands, same
-    double division, bit-identical ``avgdl``."""
-    per_doc = postings.groupBy("doc_id").agg(F.first("dl").alias("dl"))
-    agg = per_doc.agg(
-        F.count("*").alias("__n_tok"),
-        F.coalesce(F.sum("dl"), F.lit(0).cast("bigint")).alias("__sum_dl"),
-    )
-    nulls = docs.select(
-        F.count_if(F.col(text_col).isNull()).alias("__n_null")
-    )
-    n = F.col("__n_tok") + F.col("__n_null")
-    return agg.crossJoin(F.broadcast(nulls)).select(
-        n.alias("n"),
-        (F.col("__sum_dl").cast("double") / n).alias("avgdl"),
+    The plan is ONE 1-row global aggregate over a ``unionByName`` of the
+    postings projected to ``tf`` (doc marker NULL) and ``docs`` projected
+    to a constant doc marker of 1 (no source column read, no tokenizer):
+    ``n = count(marker)``, ``avgdl = sum(tf) / count(marker)`` — a partial
+    aggregate per side and a single gather exchange, no per-doc shuffle.
+
+    Exactly equal to :func:`bm25_doc_stats`, rows and schema: every token
+    of ``word_tokens`` equals exactly one distinct term, so the ``tf`` of
+    a doc's postings sum to ``size(word_tokens(text)) = dl``. Null-text
+    docs have no postings rows, just as ``sum`` skips their NULL ``dl``,
+    and are counted from ``docs`` like every other doc. Same operands,
+    same double division: bit-identical ``avgdl``, NULL when no doc has
+    text (all-NULL or empty corpus). ``text_col`` is not read: the
+    ``docs`` side needs only its row count."""
+    marker = "__doc"
+    toks = postings.select("tf", F.lit(None).cast("int").alias(marker))
+    rows = docs.select(F.lit(None).cast("bigint").alias("tf"), F.lit(1).alias(marker))
+    return toks.unionByName(rows).agg(
+        F.count(marker).alias("n"),
+        (F.sum("tf").cast("double") / F.count(marker)).alias("avgdl"),
     )
 
 
@@ -191,7 +190,7 @@ def bm25_search(
     postings = bm25_postings(docs, id_col, text_col)
     if persist_postings:
         postings = track(postings, StorageLevel.MEMORY_AND_DISK)
-        # stats ride the persisted index (dl per doc) — the standalone
+        # stats ride the persisted index (sum of tf = dl) — the standalone
         # form would tokenize the whole corpus a second time
         stats = bm25_doc_stats_from_postings(postings, docs, text_col)
     else:
@@ -553,7 +552,7 @@ def conjunctive_search(
     postings = bm25_postings(docs, id_col, text_col)
     if persist_postings:
         postings = track(postings, StorageLevel.MEMORY_AND_DISK)
-        # stats ride the persisted index (dl per doc) — the standalone
+        # stats ride the persisted index (sum of tf = dl) — the standalone
         # form would tokenize the whole corpus a second time
         stats = bm25_doc_stats_from_postings(postings, docs, text_col)
     else:

@@ -95,6 +95,17 @@ BUDGETS = {
     "tfidf_cosine_topk": 32,        # persisted postings print ×(dnorm,
                                     # num, dfreq) branches; executed: tf
                                     # agg, df agg, norm aggs, num agg, rank
+    "bm25_keyword_topk": 8,         # leaf (1) is the persisted postings'
+                                    # InMemoryTableScan, so no "(1) Scan"
+                                    # cut: each exchange counts in the tree
+                                    # AND the node details — printed 8,
+                                    # executed 4: df agg + 1-row stats
+                                    # gather + (query, doc) score agg +
+                                    # rank window
+    "hybrid_rrf_topk": 16,          # printed ×2 as above; executed 8: the
+                                    # bm25_keyword_topk four + vector rank
+                                    # window + both sides of the full-outer
+                                    # fusion join + final rank window
     "conjunctive_keyword_topk": 8,  # same postings plan as BM25 + one
                                     # n_hit broadcast join (no extra
                                     # exchange vs disjunctive)
