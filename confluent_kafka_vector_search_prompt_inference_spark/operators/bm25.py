@@ -79,43 +79,13 @@ def bm25_postings(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 def bm25_doc_stats(docs: DataFrame, text_col: str) -> DataFrame:
     """Corpus statistics ``(n, avgdl)`` in one no-explode pass over the
-    documents — the standalone form for callers without a materialized
-    postings table (building postings just for stats would cost a
-    (doc, term) explode)."""
+    documents. Used also where the postings are persisted: deriving the
+    stats from the cached postings saved this second tokenize but gave no
+    measurable gain on ``bm25_keyword_topk`` or ``hybrid_rrf_topk``."""
     lens = docs.select(F.size(word_tokens(text_col)).cast("bigint").alias("dl"))
     return lens.agg(
         F.count("*").alias("n"),
         (F.sum("dl").cast("double") / F.count("*")).alias("avgdl"),
-    )
-
-
-def bm25_doc_stats_from_postings(
-    postings: DataFrame, docs: DataFrame, text_col: str
-) -> DataFrame:
-    """``(n, avgdl)`` derived from an already-persisted postings table —
-    saving the SECOND full-corpus tokenize :func:`bm25_doc_stats` pays
-    (the persisted index already carries every token).
-
-    The plan is ONE 1-row global aggregate over a ``unionByName`` of the
-    postings projected to ``tf`` (doc marker NULL) and ``docs`` projected
-    to a constant doc marker of 1 (no source column read, no tokenizer):
-    ``n = count(marker)``, ``avgdl = sum(tf) / count(marker)`` — a partial
-    aggregate per side and a single gather exchange, no per-doc shuffle.
-
-    Exactly equal to :func:`bm25_doc_stats`, rows and schema: every token
-    of ``word_tokens`` equals exactly one distinct term, so the ``tf`` of
-    a doc's postings sum to ``size(word_tokens(text)) = dl``. Null-text
-    docs have no postings rows, just as ``sum`` skips their NULL ``dl``,
-    and are counted from ``docs`` like every other doc. Same operands,
-    same double division: bit-identical ``avgdl``, NULL when no doc has
-    text (all-NULL or empty corpus). ``text_col`` is not read: the
-    ``docs`` side needs only its row count."""
-    marker = "__doc"
-    toks = postings.select("tf", F.lit(None).cast("int").alias(marker))
-    rows = docs.select(F.lit(None).cast("bigint").alias("tf"), F.lit(1).alias(marker))
-    return toks.unionByName(rows).agg(
-        F.count(marker).alias("n"),
-        (F.sum("tf").cast("double") / F.count(marker)).alias("avgdl"),
     )
 
 
@@ -190,11 +160,7 @@ def bm25_search(
     postings = bm25_postings(docs, id_col, text_col)
     if persist_postings:
         postings = track(postings, StorageLevel.MEMORY_AND_DISK)
-        # stats ride the persisted index (sum of tf = dl) — the standalone
-        # form would tokenize the whole corpus a second time
-        stats = bm25_doc_stats_from_postings(postings, docs, text_col)
-    else:
-        stats = bm25_doc_stats(docs, text_col)
+    stats = bm25_doc_stats(docs, text_col)
     impacts = bm25_impacts(postings, k1=k1, b=b, doc_stats=stats)
     qterms = queries.select(
         F.col(query_id).alias("query_id"),
@@ -552,11 +518,7 @@ def conjunctive_search(
     postings = bm25_postings(docs, id_col, text_col)
     if persist_postings:
         postings = track(postings, StorageLevel.MEMORY_AND_DISK)
-        # stats ride the persisted index (sum of tf = dl) — the standalone
-        # form would tokenize the whole corpus a second time
-        stats = bm25_doc_stats_from_postings(postings, docs, text_col)
-    else:
-        stats = bm25_doc_stats(docs, text_col)
+    stats = bm25_doc_stats(docs, text_col)
     impacts = bm25_impacts(postings, k1=k1, b=b, doc_stats=stats)
     qt = queries.select(
         F.col(query_id).alias("query_id"),
@@ -807,7 +769,7 @@ def bm25_prf_search(
     impacts = track(
         bm25_impacts(
             postings, k1=k1, b=b,
-            doc_stats=bm25_doc_stats_from_postings(postings, docs, text_col),
+            doc_stats=bm25_doc_stats(docs, text_col),
         ),
         StorageLevel.MEMORY_AND_DISK,
     )

@@ -7,8 +7,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from confluent_kafka_vector_search_prompt_inference_spark.operators.bm25 import (
-    bm25_doc_stats,
-    bm25_doc_stats_from_postings,
     bm25_impacts,
     bm25_postings,
     bm25_search,
@@ -90,26 +88,6 @@ def test_empty_corpus_returns_no_rows(spark):
     docs = spark.createDataFrame([], "doc_id long, text string")
     queries = spark.createDataFrame([(0, "anything")], ["query_id", "query_text"])
     assert bm25_search(docs, queries, k=5).count() == 0
-
-
-@pytest.mark.parametrize(
-    "texts",
-    [
-        [None, "", "   ", "a b a a", "spark  shuffles spark"],
-        [None, None],
-        ["", ""],
-        [],
-    ],
-    ids=["mixed", "all_null", "only_empty", "empty"],
-)
-def test_doc_stats_from_postings_equal_standalone(spark, texts):
-    """The postings-derived stats are the standalone stats, NULL avgdl
-    and the empty corpus included."""
-    d = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
-    got = bm25_doc_stats_from_postings(bm25_postings(d, "doc_id", "text"), d, "text")
-    want = bm25_doc_stats(d, "text")
-    assert got.schema == want.schema
-    assert got.collect() == want.collect()
 
 
 def test_query_with_no_matching_terms(toy_docs):
