@@ -67,6 +67,7 @@ from confluent_kafka_vector_search_prompt_inference_spark.operators.sampling imp
 from confluent_kafka_vector_search_prompt_inference_spark.operators.skew import salted_join
 from confluent_kafka_vector_search_prompt_inference_spark.operators.topk_join import topk_similarity_join
 from confluent_kafka_vector_search_prompt_inference_spark.sources.multimodal import with_image_features
+from confluent_kafka_vector_search_prompt_inference_spark.persist import release_tracked, track
 from confluent_kafka_vector_search_prompt_inference_spark.streaming.rag import RagPipeline
 
 
@@ -76,49 +77,33 @@ from confluent_kafka_vector_search_prompt_inference_spark.streaming.rag import R
 # DataFrame.persist registration lives in the session CacheManager until
 # explicitly unpersisted — it is NOT garbage-collected with the DataFrame —
 # so repeated library-style invocation would accumulate cached partitions.
-# Every persist in this module routes through _persist(), and
-# release_persisted() drops them all: the correctness harness calls it
-# after each query; a long-lived server should call it whenever a query's
-# result has been fully consumed. bench.py deliberately releases only at
-# the END of a pass — a warm cache across the two timed passes models the
-# steady-state of an always-on engine, and relying on it WITHIN a single
-# query is impossible (each invocation re-persists its own subtrees).
-_PERSISTED: list[DataFrame] = []
+# Every persist in this module goes through the package's one registry,
+# persist.track(), and release_persisted() drops them all: the correctness
+# harness calls it after each query; a long-lived server should call it
+# whenever a query's result has been fully consumed. bench.py deliberately
+# releases only at the END of a pass — a warm cache across the two timed
+# passes models the steady-state of an always-on engine, and relying on it
+# WITHIN a single query is impossible (each invocation re-persists its own
+# subtrees).
 
 
-def _persist(df: DataFrame) -> DataFrame:
-    """Persist ``df`` and register it for :func:`release_persisted`.
+def release_persisted() -> int:
+    """Unpersist every DataFrame persisted through the package's
+    releasable registry (``persist.track``) — this module's shared
+    subtrees and the operator-internal persists alike (BM25 postings,
+    span-family tables, repetition signals) — and return how many were
+    released.
 
     Contract for harnesses: several queries RETURN DataFrames whose plans
     read persisted subtrees (shared shingle/occurrence tables, persisted
     pre-sort results — e.g. trigram_lm_quality, countmin_term_freqs,
     training_set_selection, gopher_repetition_quality,
     line_boilerplate_removal, crawl_curation_pipeline, the span family).
-    A caller sweeping many queries without calling
-    :func:`release_persisted` between/after them accumulates executor
-    memory for the whole sweep (bench.py, tools/parity.py,
-    tools/capture_plans.py and tools/timeq.py all release)."""
-    df = df.persist()
-    _PERSISTED.append(df)
-    return df
-
-
-def release_persisted() -> int:
-    """Unpersist every DataFrame this module has persisted — plus every
-    operator-internal persist routed through the package's releasable
-    registry (BM25 postings, span-family tables, repetition signals; see
-    confluent_kafka_vector_search_prompt_inference_spark/persist.py) —
-    and return how many were released."""
-    from confluent_kafka_vector_search_prompt_inference_spark.persist import release_tracked
-
-    n = 0
-    while _PERSISTED:
-        try:
-            _PERSISTED.pop().unpersist()
-            n += 1
-        except Exception:  # session already stopped — nothing to release
-            pass
-    return n + release_tracked()
+    A caller sweeping many queries without calling this between/after
+    them accumulates executor memory for the whole sweep (bench.py,
+    tools/parity.py, tools/capture_plans.py and tools/timeq.py all
+    release)."""
+    return release_tracked()
 
 
 def _spread_width(spark: SparkSession) -> int:
@@ -1604,7 +1589,7 @@ def line_boilerplate_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist before the global sort: the sort's range-boundary sampling
     # re-executes the reassembly aggregate otherwise (guide §5; measured
     # 2.11 s → 1.85 s warm at sf0.1)
-    return _persist(
+    return track(
         remove_repeated_lines(
             pages, "doc_id", "page",
             group_cols=["source"], min_docs=2, max_doc_frac=0.25,
@@ -1864,7 +1849,7 @@ def gopher_repetition_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # joins), so the sort otherwise pays the signal assembly twice
     # (guide §5 — reused AND expensive to recompute; measured 1.96 s →
     # 1.42 s warm at sf0.1)
-    return _persist(gopher_repetition_signals(docs)).orderBy("doc_id")
+    return track(gopher_repetition_signals(docs)).orderBy("doc_id")
 
 
 def _gopher_ctes(rel: str) -> str:
@@ -2093,7 +2078,7 @@ def minhash_lsh_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     # repartition: a single small parquet file arrives as ONE partition, and
     # signature computation is per-row-heavy — spread it across cores
     docs = _t(spark, sf_dir, "documents").repartition(_spread_width(spark), "doc_id")
-    sh = docs.select("doc_id", word_shingles("text", 3).alias("__sh")).transform(_persist)
+    sh = docs.select("doc_id", word_shingles("text", 3).alias("__sh")).transform(track)
     sigs = minhash_signatures(
         sh, "doc_id", None, num_hashes=64, shingle_col="__sh"
     )
@@ -2776,14 +2761,14 @@ def crawl_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         pages.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn")
-        .transform(_persist)
+        .transform(track)
     )
     # stage: near-dedup on the extracted text — identical pipeline shape
     # to minhash_lsh_dups (shingles persisted once, shared by signature
     # and verify legs; banded LSH bounds candidate volume)
     sh = url_surv.select(
         "doc_id", word_shingles("extracted", 3).alias("__sh")
-    ).transform(_persist)
+    ).transform(track)
     sigs = minhash_signatures(
         sh, "doc_id", None, num_hashes=64, shingle_col="__sh"
     )
@@ -2804,7 +2789,7 @@ def crawl_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-executes its child's final stage — here the anti-join plus the
     # per-row quality regexes — before the real pass (guide §5; measured
     # 3.43 s → 2.87 s min-of-4 warm at sf0.1).
-    return _persist(
+    return track(
         survivors.select(
             "doc_id",
             "canon_url",
@@ -3391,7 +3376,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     rev = F.round(F.col("l_extendedprice") * 100).cast("bigint") * (
         F.lit(100) - F.round(F.col("l_discount") * 100).cast("bigint")
     )
-    totals = _persist(li.groupBy("l_suppkey").agg(F.sum(rev).alias("rev_units")))
+    totals = track(li.groupBy("l_suppkey").agg(F.sum(rev).alias("rev_units")))
     max_units = totals.agg(F.max("rev_units").alias("max_units"))
     return (
         totals.crossJoin(F.broadcast(max_units))
@@ -3667,7 +3652,7 @@ def dedup_cluster_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     from confluent_kafka_vector_search_prompt_inference_spark.operators.dedup import word_shingles
 
     docs = _t(spark, sf_dir, "documents").repartition(_spread_width(spark), "doc_id")
-    sh = docs.select("doc_id", word_shingles("text", 3).alias("__sh")).transform(_persist)
+    sh = docs.select("doc_id", word_shingles("text", 3).alias("__sh")).transform(track)
     sigs = minhash_signatures(sh, "doc_id", None, num_hashes=64, shingle_col="__sh")
     cands = minhash_lsh_candidates(
         sigs, "doc_id", bands=16, num_hashes=64, with_estimate=False
@@ -3728,7 +3713,7 @@ def dedup_cluster_best_representative(spark: SparkSession, sf_dir: str) -> DataF
     from confluent_kafka_vector_search_prompt_inference_spark.operators.dedup import word_shingles
 
     docs = _t(spark, sf_dir, "documents").repartition(_spread_width(spark), "doc_id")
-    sh = docs.select("doc_id", word_shingles("text", 3).alias("__sh")).transform(_persist)
+    sh = docs.select("doc_id", word_shingles("text", 3).alias("__sh")).transform(track)
     sigs = minhash_signatures(sh, "doc_id", None, num_hashes=64, shingle_col="__sh")
     cands = minhash_lsh_candidates(
         sigs, "doc_id", bands=16, num_hashes=64, with_estimate=False
@@ -4600,7 +4585,7 @@ def unigram_logprob_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     per doc); per-doc totals weight each term's log-prob by its tf, so
     the result equals the per-token sum with ~4× fewer joined rows."""
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    post = bm25_postings(docs, "doc_id", "text").transform(_persist)
+    post = bm25_postings(docs, "doc_id", "text").transform(track)
     vocab = post.groupBy("term").agg(F.sum("tf").alias("ctf"))
     total = vocab.agg(F.sum("ctf").alias("n_total"))
     logp = vocab.join(F.broadcast(total)).select(
@@ -4832,7 +4817,7 @@ def benchmark_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     from confluent_kafka_vector_search_prompt_inference_spark.operators.dedup import word_shingles
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text").repartition(_spread_width(spark), "doc_id")
-    shd = docs.select("doc_id", word_shingles("text", 5).alias("__sh")).transform(_persist)
+    shd = docs.select("doc_id", word_shingles("text", 5).alias("__sh")).transform(track)
     tot = shd.select("doc_id", F.size("__sh").cast("bigint").alias("n_shingles"))
     bench = (
         shd.filter(F.col("doc_id") < 5)
@@ -5418,7 +5403,7 @@ def term_pmi_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.explode(F.array_distinct(word_tokens("text"))).alias("t"),
         )
         .repartition("doc_id")
-        .transform(_persist)
+        .transform(track)
     )
     n_docs = dt.select("doc_id").distinct().count()
     tc = dt.groupBy("t").agg(F.count("*").alias("n_t"))
@@ -5751,7 +5736,7 @@ def incremental_dau_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("user_id").alias("exact"),
         )
         .select(F.col("w.start").alias("window_start"), "sk", "exact")
-        .transform(_persist)
+        .transform(track)
     )
     ok = (
         F.abs(F.hll_sketch_estimate("sk") - F.col("exact"))
@@ -5879,7 +5864,7 @@ def embedding_class_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     long = emb.select(
         "vec_id", "label", F.posexplode("e9").alias("pos", "v9")
-    ).transform(_persist)
+    ).transform(track)
     cent = (
         long.groupBy("label", "pos")
         .agg(F.sum("v9").alias("s9"), F.count("*").alias("n"))
@@ -6073,7 +6058,7 @@ def copurchase_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_orderkey", "l_partkey")
         .repartition("l_orderkey")
         .dropDuplicates(["l_orderkey", "l_partkey"])
-        .transform(_persist)
+        .transform(track)
     )
     cnt = items.groupBy("l_partkey").agg(F.count("*").alias("cnt"))
     tot = items.agg(F.countDistinct("l_orderkey").alias("n_orders"))
@@ -6154,7 +6139,7 @@ def part_graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(
             pairs.select(F.col("part_b").alias("src"), F.col("part_a").alias("dst"))
         )
-        .transform(_persist)
+        .transform(track)
     )
     seed = edges.agg(F.min("src").alias("s")).first()["s"]
     dists = (
@@ -6417,7 +6402,7 @@ def training_set_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
         quality_score("text").alias("quality"),
         doc_fingerprint("text").alias("fp"),
         sh5.alias("__sh"),
-    ).transform(_persist)
+    ).transform(track)
     survivors = (
         base.withColumn("n_shingles", F.size("__sh").cast("bigint"))
         .withColumn("min_id", F.min("doc_id").over(Window.partitionBy("fp")))
@@ -6697,7 +6682,7 @@ def semantic_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "v", F.col("anchor_id").alias("cluster"))
         # assign feeds both self-join sides and the final anti-join —
         # persist so the score+rank subtree runs once, not three times
-        .transform(_persist)
+        .transform(track)
     )
     dropped = semantic_dropped_ids(assign, "vec_id", "v", threshold=0.99)
     return assign.join(dropped, "vec_id", "left_anti").select("vec_id", "cluster")
@@ -6756,7 +6741,7 @@ def bigram_logprob_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     # doc_bg feeds both the model side (bigram counts) and the final
     # scoring join — persist so tokenize+explode+agg runs once, not per
     # consuming branch (Catalyst re-executes shared subtrees otherwise)
-    doc_bg = bg.groupBy("doc_id", "prev", "cur").agg(F.count("*").alias("n")).transform(_persist)
+    doc_bg = bg.groupBy("doc_id", "prev", "cur").agg(F.count("*").alias("n")).transform(track)
     bgc = (
         doc_bg.repartition("prev")
         .groupBy("prev", "cur")
@@ -6933,7 +6918,7 @@ def subsequence_similarity_search(spark: SparkSession, sf_dir: str) -> DataFrame
         ev.groupBy("user_id")
         .agg(F.array_sort(F.collect_list(F.struct("ts", "event_id", "value"))).alias("s"))
         .select("user_id", F.expr("transform(s, r -> r.value)").alias("vals"))
-        .transform(_persist)
+        .transform(track)
     )
     cents = "cast(round({x} * 100) as bigint)"
     mu_of = (
@@ -7146,7 +7131,7 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.filter(F.col("event_type") == "view")
         .groupBy("user_id")
         .agg(F.min("ts").alias("t_view"))
-        .transform(_persist)
+        .transform(track)
     )
     clicks = (
         ev.filter(F.col("event_type") == "click")
@@ -7154,7 +7139,7 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("ts") > F.col("t_view"))
         .groupBy("user_id")
         .agg(F.min("ts").alias("t_click"))
-        .transform(_persist)
+        .transform(track)
     )
     buys = (
         ev.filter(F.col("event_type") == "purchase")
@@ -7689,10 +7674,10 @@ def gram_heavy_hitters_mg(spark: SparkSession, sf_dir: str) -> DataFrame:
     occ = (
         gram_occurrences(span_tokenized(docs, "doc_id", "text"), 5)
         .select(F.col("__s").alias("item"))
-        .transform(_persist)
+        .transform(track)
     )
-    summ = mg_summary(mg_sketch(occ, "item", k=64), k=64).transform(_persist)
-    exact = occ.groupBy("item").agg(F.count("*").alias("tc")).transform(_persist)
+    summ = mg_summary(mg_sketch(occ, "item", k=64), k=64).transform(track)
+    exact = occ.groupBy("item").agg(F.count("*").alias("tc")).transform(track)
     j = summ.join(exact, "item", "left")
     checks = j.agg(
         F.count("*").alias("sk_size"),
@@ -7759,15 +7744,15 @@ def domain_heavy_hitters_mg(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(
             F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
         ).alias("item"),
-    ).transform(_persist)
+    ).transform(track)
     summ = mg_summary(
         mg_sketch(occ, "item", k=k, group_cols=["source"]),
         k=k, group_cols=["source"],
-    ).transform(_persist)
+    ).transform(track)
     exact = (
         occ.groupBy("source", "item")
         .agg(F.count("*").alias("tc"))
-        .transform(_persist)
+        .transform(track)
     )
     j = summ.join(exact, ["source", "item"], "left")
     checks = j.groupBy("source").agg(
@@ -7834,9 +7819,9 @@ def corpus_selfjoin_f2(spark: SparkSession, sf_dir: str) -> DataFrame:
     words = (
         _t(spark, sf_dir, "documents")
         .select(F.explode(F.split(F.trim(F.regexp_replace(F.lower("text"), r"\s+", " ")), " ")).alias("item"))
-        .transform(_persist)
+        .transform(track)
     )
-    sk = ams_sketch(words, "item", depth=32).transform(_persist)
+    sk = ams_sketch(words, "item", depth=32).transform(track)
     est = ams_f2(sk, group=8)
     # exact side squares AND STAYS in DECIMAL(38,0): a BIGINT c*c wraps
     # silently past c ~ 3e9 (a plausible single-token count at corpus
@@ -7924,7 +7909,7 @@ def countmin_term_freqs(spark: SparkSession, sf_dir: str) -> DataFrame:
     tc = (
         toks.groupBy("term")
         .agg(F.count("*").alias("true_cnt"))
-        .transform(_persist)
+        .transform(track)
     )
     sketch = countmin_build(tc, "term", depth=4, width=512, weight_col="true_cnt")
     top = tc.orderBy(F.desc("true_cnt"), F.asc("term")).limit(20)
@@ -7983,7 +7968,7 @@ def source_term_freqs_cm(spark: SparkSession, sf_dir: str) -> DataFrame:
     tc = (
         toks.groupBy("source", "term")
         .agg(F.count("*").alias("true_cnt"))
-        .transform(_persist)
+        .transform(track)
     )
     sketch = countmin_build(
         tc, "term", depth=4, width=256, weight_col="true_cnt",
@@ -8583,7 +8568,7 @@ def trigram_lm_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         base.select("doc_id", F.explode(ngrams(3)).alias("tri"))
         .groupBy("doc_id", "tri")
         .agg(F.count("*").alias("__c"))
-        .transform(_persist)
+        .transform(track)
     )
     tri_counts = dt.groupBy("tri").agg(F.sum("__c").alias("c_tri"))
     bi = base.select("doc_id", F.explode(ngrams(2)).alias("bi"))
@@ -8716,7 +8701,6 @@ def crossdoc_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct-per-doc shingles come from a DISTINCT over the occurrence
     rows — the same set ``array_distinct(word_shingles(...))`` produced."""
     from confluent_kafka_vector_search_prompt_inference_spark.operators.dedup import gram_occurrences, span_tokenized
-    from confluent_kafka_vector_search_prompt_inference_spark.persist import track
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     base = track(span_tokenized(docs, "doc_id", "text"))
@@ -8728,7 +8712,7 @@ def crossdoc_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "__id", F.concat_ws(" ", "__toks").alias("__s")
             )
         )
-        .transform(_persist)
+        .transform(track)
     )
     df_counts = sh.groupBy("__s").agg(F.count("*").alias("n_docs"))
     tot = sh.groupBy("__id").agg(F.count("*").alias("n_spans"))
@@ -9279,15 +9263,15 @@ def part_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(
             pairs.select(F.col("part_b").alias("src"), F.col("part_a").alias("dst"))
         )
-        .transform(_persist)
+        .transform(track)
     )
     # node-sized, consumed five times (the ed build, the pr seed, and the
     # per-iteration node list ×3) — without the persist each consumer
     # re-aggregates the persisted edge table
-    deg = edges.groupBy("src").agg(F.count("*").alias("deg")).transform(_persist)
+    deg = edges.groupBy("src").agg(F.count("*").alias("deg")).transform(track)
     # out-degree rides the edge table (persisted once) so each power
     # iteration pays ONE join instead of edges⋈pr⋈deg
-    ed = edges.join(deg, "src").transform(_persist)
+    ed = edges.join(deg, "src").transform(track)
     pr = deg.select(F.col("src").alias("node"), F.lit(1.0).alias("pr"))
     for _ in range(3):
         contrib = (
@@ -10443,7 +10427,7 @@ def corpus_overlap_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = docs.select(
         (F.col("source").substr(4, 10).cast("int") % 2).alias("half"),
         F.explode(word_shingles(F.col("text"), 3)).alias("s"),
-    ).transform(_persist)
+    ).transform(track)
     sa = kmv_sketch(sh.filter("half = 0"), "s", k=k)
     sb = kmv_sketch(sh.filter("half = 1"), "s", k=k)
     est = kmv_overlap(sa, sb, k=k)
@@ -10560,7 +10544,7 @@ def bloom_returning_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     past = (
         ev.crossJoin(F.broadcast(cut)).filter("us < cut").select("user_id").distinct()
-    ).transform(_persist)
+    ).transform(track)
     probes = (
         ev.crossJoin(F.broadcast(cut)).filter("us >= cut").select("user_id").distinct()
     )
@@ -10664,7 +10648,7 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents").repartition(_spread_width(spark), "doc_id")
     sh = docs.select(
         "source", F.explode(word_shingles(F.col("text"), 3)).alias("s")
-    ).transform(_persist)
+    ).transform(track)
     grouped = kmv_sketch(sh, "s", k=k, set_cols=["source"])
     est = kmv_overlap_matrix(grouped, k=k, set_col="source")
     # exact per-pair Jaccard over the same shingle sets (distinct

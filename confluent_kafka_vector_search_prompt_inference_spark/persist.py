@@ -1,15 +1,16 @@
-"""Releasable registry for operator-internal persists.
+"""The one releasable registry for query-lifetime persists.
 
 Operators that persist an intermediate for multi-branch reuse (BM25
 postings, span-family tokenized/occurrence tables, repetition signals)
-used to call ``DataFrame.persist()`` raw and never unpersist — harmless
-in a short-lived job, but a long-lived server session accumulates every
-query's intermediates in the block manager. Routing them through this
-registry keeps the within-query reuse (the persist still happens at the
+and the entry module's queries that persist a shared subtree both call
+``track()`` instead of ``DataFrame.persist()``: a raw persist is never
+unpersisted — harmless in a short-lived job, but a long-lived server
+session accumulates every query's intermediates in the block manager.
+Tracking keeps the within-query reuse (the persist still happens at the
 same point in the plan) while giving hosts ONE release point:
-``release_tracked()``, also invoked by the entry module's
-``release_persisted()`` so existing harnesses (bench, parity, plan
-capture) release everything they triggered.
+``release_tracked()``, which the entry module's ``release_persisted()``
+simply returns, so existing harnesses (bench, parity, plan capture)
+release everything they triggered.
 
 Per-micro-batch persists in the streaming lanes are NOT routed here —
 each owns a matching ``unpersist`` inside its batch body, which is the

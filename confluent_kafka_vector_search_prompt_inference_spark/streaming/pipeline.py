@@ -132,6 +132,22 @@ def _parallel_postcommit(*thunks) -> None:
             raise e
 
 
+def _start_stream(
+    stream_df: DataFrame, process, checkpoint_dir: str, trigger_once: bool
+) -> StreamingQuery:
+    """Start a lane: ``process(batch_df, epoch_id)`` is the stream's
+    ``foreachBatch`` body, progress checkpoints under ``checkpoint_dir``
+    (the replayable-source half of the exactly-once contract; the
+    epoch-keyed sink writes are the idempotent half).
+    ``trigger_once`` drains the available input then stops."""
+    writer = stream_df.writeStream.foreachBatch(process).option(
+        "checkpointLocation", checkpoint_dir
+    )
+    if trigger_once:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def continuous_insert(
     stream_df: DataFrame,
     sink_dir: str,
@@ -185,12 +201,7 @@ def continuous_insert(
             batch_df = transform(batch_df)
         write_batch(batch_df, epoch_id)
 
-    writer = stream_df.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_stream(stream_df, process, checkpoint_dir, trigger_once)
 
 
 def enforce_retention(
@@ -204,39 +215,118 @@ def enforce_retention(
     retention (1 h / 1 GB on ``user_questions``, ``README.md:102``):
     bounded sink state under a continuous INSERT. Returns the epoch ids
     removed. Oldest-first by epoch id; a batch is only dropped whole
-    (mirroring segment deletion, not row-level expiry)."""
+    (mirroring segment deletion, not row-level expiry). Only committed
+    epochs count toward either budget, each with every byte under it;
+    an in-flight epoch (no ``_SUCCESS`` yet) is left alone."""
+    doomed, _ = _retention_walk(sink_dir, max_batches, max_bytes)
+    return [_drop_epoch(sink_dir, d) for d in doomed]
+
+
+def _retention_walk(
+    sink_dir: str, max_batches: int | None, max_bytes: int | None
+) -> tuple[list[str], list[str]]:
+    """The retention budget walk every ``enforce_retention*`` shares:
+    over the COMMITTED epochs only (an in-flight epoch is invisible to
+    readers, so it neither counts toward the budget nor is deleted),
+    oldest-first, whole epochs, each weighed with everything under it
+    (partitioned epochs keep their files in ``col=`` subdirs). Returns
+    ``(doomed, survivors)``: the oldest dirs that must go for the rest
+    to fit both budgets, and the rest."""
+    dirs = _committed_batch_dirs(sink_dir)
+    sizes = [_dir_bytes(d) if max_bytes is not None else 0 for d in dirs]
+    total, n = sum(sizes), 0
+    while n < len(dirs) and (
+        (max_batches is not None and len(dirs) - n > max_batches)
+        or (max_bytes is not None and total > max_bytes)
+    ):
+        total -= sizes[n]
+        n += 1
+    return dirs[:n], dirs[n:]
+
+
+def _drop_epoch(sink_dir: str, batch_dir: str) -> int:
+    """Delete one sink epoch and return its id. The epoch's live-id
+    sidecar goes FIRST: a crash between the two deletes then leaves a
+    sink epoch without a sidecar (readers fall back to the epoch itself
+    — exact), never an orphaned sidecar."""
+    import shutil
+
+    eid = int(batch_dir.rsplit("=", 1)[1])
+    shutil.rmtree(
+        os.path.join(_ids_root(sink_dir), f"_batch={eid}"), ignore_errors=True
+    )
+    shutil.rmtree(batch_dir)
+    return eid
+
+
+def _retire_tmp(store: str, eid: int) -> str:
+    return os.path.join(store, f"_retire_tmp_{eid}")
+
+
+def _stage_retirement(delta: DataFrame, store: str, eid: int, nparts: int) -> None:
+    """Write a retiring epoch's NEGATIVE bucket-store delta to the
+    store's ``_retire_tmp_<e>``, laid out like a live delta (one file,
+    rows sorted by their ``__bpart`` store partition)."""
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    tmp = _retire_tmp(store, eid)
+    shutil.rmtree(tmp, ignore_errors=True)
+    (
+        delta.withColumn(
+            "__bpart", F.pmod(F.col("__bucket"), F.lit(nparts)).cast("int")
+        )
+        .repartition(1)
+        .sortWithinPartitions("__bpart")
+        .write.mode("overwrite")
+        .parquet(tmp)
+    )
+
+
+def _publish_retirement(store: str, eid: int) -> None:
+    """Rename a complete retirement tmp to ``_batch=<-1000-e>``: negative
+    ids, disjoint from every stream epoch (≥ 0) and ladder pre-land
+    (−1, −2), so a replayed stream epoch can never be swallowed by a
+    retirement dir."""
+    import shutil
+
+    target = os.path.join(store, f"_batch={-1000 - eid}")
+    shutil.rmtree(target, ignore_errors=True)
+    os.rename(_retire_tmp(store, eid), target)
+
+
+def _recover_retirements(sink_dir: str, stores: list[str]) -> None:
+    """Finish what a crashed negative-delta retention left: a COMPLETE
+    tmp whose sink epoch is gone publishes; anything else is debris (its
+    epoch is either still present — the caller re-derives it — or its
+    raw text is lost and the conservative outcome is keep-suppressing)."""
     import re
     import shutil
 
-    dirs = []
-    for d in sorted(os.listdir(sink_dir)) if os.path.isdir(sink_dir) else []:
-        m = re.fullmatch(r"_batch=(\d+)", d)
-        if m:
-            path = os.path.join(sink_dir, d)
-            size = sum(
-                os.path.getsize(os.path.join(path, f))
-                for f in os.listdir(path)
-                if os.path.isfile(os.path.join(path, f))
+    for store in stores:
+        for name in os.listdir(store) if os.path.isdir(store) else []:
+            m = re.fullmatch(r"_retire_tmp_(-?\d+)", name)
+            if not m:
+                continue
+            eid, tmp = int(m.group(1)), os.path.join(store, name)
+            epoch_gone = not os.path.exists(
+                os.path.join(sink_dir, f"_batch={eid}", "_SUCCESS")
             )
-            dirs.append((int(m.group(1)), path, size))
-    dirs.sort()  # oldest epoch first
-    removed: list[int] = []
-    while dirs:
-        over_count = max_batches is not None and len(dirs) > max_batches
-        over_bytes = max_bytes is not None and sum(s for _, _, s in dirs) > max_bytes
-        if not (over_count or over_bytes):
-            break
-        epoch, path, _ = dirs.pop(0)
-        # the epoch's live-id sidecar goes FIRST: a crash between the two
-        # deletes then leaves a sink epoch without a sidecar (readers fall
-        # back to the epoch itself — exact), never an orphaned sidecar
-        shutil.rmtree(
-            os.path.join(_ids_root(sink_dir), f"_batch={epoch}"),
-            ignore_errors=True,
-        )
-        shutil.rmtree(path)
-        removed.append(epoch)
-    return removed
+            if epoch_gone and os.path.exists(os.path.join(tmp, "_SUCCESS")):
+                _publish_retirement(store, eid)
+            else:
+                shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _backfill_positive(delta: DataFrame, store: str, eid: int, nparts: int) -> None:
+    """Coverage guard before a negative publishes: land the retiring
+    epoch's POSITIVE delta if a crash beat the stream's heal pass to it
+    (idempotent — :func:`write_bucket_delta` skips a committed epoch).
+    An unmatched negative would under-count keys whose other carriers
+    are still live."""
+    if not _ranges_contain(_covered_bucket_ranges(store), eid):
+        write_bucket_delta(delta.repartition(1), store, eid, num_partitions=nparts)
 
 
 #: exact-dedup store size above which the per-batch read prunes by
@@ -695,12 +785,7 @@ def dedup_insert(
             if gate_inc is not None and gate_inc is not inc:
                 gate_inc.unpersist()
 
-    writer = stream_df.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_stream(stream_df, process, checkpoint_dir, trigger_once)
 
 
 def _sink_has_batches(sink_dir: str) -> bool:
@@ -962,12 +1047,7 @@ def spanclean_insert(
             if inc is not None:
                 inc.unpersist()
 
-    writer = stream_df.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_stream(stream_df, process, checkpoint_dir, trigger_once)
 
 
 def _spanclean_sync_mode(grams_dir: str, carrier_counts: bool) -> None:
@@ -1338,12 +1418,7 @@ def lineclean_insert(
             lines.unpersist()
             binc.unpersist()
 
-    writer = stream_df.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_stream(stream_df, process, checkpoint_dir, trigger_once)
 
 
 def read_corpus_lines(
@@ -1426,94 +1501,37 @@ def enforce_retention_lineclean(
     incomplete ones — a lost line-negative keeps suppressing (the
     lane's conservative default), a lost totals-negative keeps the
     gate HARDER to cross (under-cleaning, never over-cleaning)."""
-    import re
-    import shutil
-
     from pyspark.sql import functions as F
 
     g = list(group_cols or [])
     lines_dir = os.path.join(sink_dir, "_lines")
     totals_dir = os.path.join(sink_dir, "_linetotals")
-
-    def _neg_id(eid: int) -> int:
-        return -1000 - eid
-
-    def _publish(store: str, tmp: str, eid: int) -> None:
-        target = os.path.join(store, f"_batch={_neg_id(eid)}")
-        shutil.rmtree(target, ignore_errors=True)
-        os.rename(tmp, target)
-
-    for store in (lines_dir, totals_dir):
-        for tmp in list(
-            os.path.join(store, x)
-            for x in (os.listdir(store) if os.path.isdir(store) else [])
-            if re.fullmatch(r"_retire_tmp_-?\d+", x)
-        ):
-            eid = int(os.path.basename(tmp).rsplit("_", 1)[1])
-            epoch_gone = not os.path.exists(
-                os.path.join(sink_dir, f"_batch={eid}", "_SUCCESS")
-            )
-            if epoch_gone and os.path.exists(os.path.join(tmp, "_SUCCESS")):
-                _publish(store, tmp, eid)
-            else:
-                shutil.rmtree(tmp, ignore_errors=True)
-
-    dirs = []
-    for d in sorted(os.listdir(sink_dir)) if os.path.isdir(sink_dir) else []:
-        m = re.fullmatch(r"_batch=(-?\d+)", d)
-        if m:
-            path = os.path.join(sink_dir, d)
-            if not os.path.exists(os.path.join(path, "_SUCCESS")):
-                continue
-            dirs.append((int(m.group(1)), path, _dir_bytes(path)))
-    dirs.sort()
+    _recover_retirements(sink_dir, [lines_dir, totals_dir])
+    doomed, _ = _retention_walk(sink_dir, max_batches, max_bytes)
     removed: list[int] = []
-    while dirs:
-        over_count = max_batches is not None and len(dirs) > max_batches
-        over_bytes = max_bytes is not None and sum(s for _, _, s in dirs) > max_bytes
-        if not (over_count or over_bytes):
-            break
-        eid, path, _ = dirs.pop(0)
+    for path in doomed:
+        eid = int(path.rsplit("=", 1)[1])
         rows = spark.read.parquet(path).select(id_col, text_col, *g)
         _, _, binc, btot = _lineclean_tables(rows, id_col, text_col, g, line_sep)
         binc = binc.persist()
         btot = btot.persist()
         try:
-            # (0) coverage guards — idempotent backfills from raw text
-            if not _ranges_contain(_covered_bucket_ranges(lines_dir), eid):
-                write_bucket_delta(
-                    binc.repartition(1), lines_dir, eid,
-                    num_partitions=line_partitions,
-                )
-            if not _ranges_contain(_covered_bucket_ranges(totals_dir), eid):
-                write_bucket_delta(
-                    btot.repartition(1), totals_dir, eid, num_partitions=1
-                )
-            # (1) both negatives into tmps, raw text still present
-            tmps = []
-            for store, delta, cnt_col, nparts in (
+            stores = (
                 (lines_dir, binc, "__cnt", line_partitions),
                 (totals_dir, btot, "__nd", 1),
-            ):
-                tmp = os.path.join(store, f"_retire_tmp_{eid}")
-                shutil.rmtree(tmp, ignore_errors=True)
-                (
-                    delta.withColumn(cnt_col, -F.col(cnt_col))
-                    .withColumn(
-                        "__bpart",
-                        F.pmod(F.col("__bucket"), F.lit(nparts)).cast("int"),
-                    )
-                    .repartition(1)
-                    .sortWithinPartitions("__bpart")
-                    .write.mode("overwrite")
-                    .parquet(tmp)
+            )
+            # (0) coverage guards; (1) both negatives into tmps, raw
+            # text still present
+            for store, delta, _, nparts in stores:
+                _backfill_positive(delta, store, eid, nparts)
+            for store, delta, cnt_col, nparts in stores:
+                _stage_retirement(
+                    delta.withColumn(cnt_col, -F.col(cnt_col)), store, eid, nparts
                 )
-                tmps.append((store, tmp))
             # (2) the epoch leaves the sink; (3) publish both releases
-            shutil.rmtree(path)
-            for store, tmp in tmps:
-                _publish(store, tmp, eid)
-            removed.append(eid)
+            removed.append(_drop_epoch(sink_dir, path))
+            for store, *_ in stores:
+                _publish_retirement(store, eid)
         finally:
             binc.unpersist()
             btot.unpersist()
@@ -1567,8 +1585,6 @@ def enforce_retention_spanclean(
     to be carrier-counted (raises otherwise — an uncounted store cannot
     subtract)."""
     import json
-    import re
-    import shutil
 
     from pyspark.sql import functions as F
 
@@ -1591,55 +1607,18 @@ def enforce_retention_spanclean(
             "carrier_counts=True from the sink's first epoch"
         )
 
-    def _neg_id(eid: int) -> int:
-        return -1000 - eid
-
-    def _publish(tmp: str, eid: int) -> None:
-        target = os.path.join(grams_dir, f"_batch={_neg_id(eid)}")
-        shutil.rmtree(target, ignore_errors=True)
-        os.rename(tmp, target)
-
-    # recover a prior crash: a COMPLETE tmp whose sink epoch is gone
-    # publishes; anything else is debris (its epoch is either still
-    # present — we re-derive below — or its raw text is lost and the
-    # conservative outcome is keep-suppressing)
-    for tmp in list(
-        d
-        for d in (
-            os.path.join(grams_dir, x)
-            for x in (os.listdir(grams_dir) if os.path.isdir(grams_dir) else [])
-        )
-        if re.fullmatch(r"_retire_tmp_-?\d+", os.path.basename(d))
-    ):
-        eid = int(os.path.basename(tmp).rsplit("_", 1)[1])
-        epoch_gone = not os.path.exists(
-            os.path.join(sink_dir, f"_batch={eid}", "_SUCCESS")
-        )
-        if epoch_gone and os.path.exists(os.path.join(tmp, "_SUCCESS")):
-            _publish(tmp, eid)
-        else:
-            shutil.rmtree(tmp, ignore_errors=True)
-
+    _recover_retirements(sink_dir, [grams_dir])
     # budget walk: oldest-first, whole epochs — the enforce_retention
     # policy with the gram-release protocol spliced in
-    dirs = []
-    for d in sorted(os.listdir(sink_dir)) if os.path.isdir(sink_dir) else []:
-        m = re.fullmatch(r"_batch=(-?\d+)", d)
-        if m:
-            path = os.path.join(sink_dir, d)
-            if not os.path.exists(os.path.join(path, "_SUCCESS")):
-                continue
-            dirs.append((int(m.group(1)), path, _dir_bytes(path)))
-    dirs.sort()
+    doomed, _ = _retention_walk(sink_dir, max_batches, max_bytes)
     removed: list[int] = []
-    while dirs:
-        over_count = max_batches is not None and len(dirs) > max_batches
-        over_bytes = max_bytes is not None and sum(s for _, _, s in dirs) > max_bytes
-        if not (over_count or over_bytes):
-            break
-        eid, path, _ = dirs.pop(0)
+    for path in doomed:
+        eid = int(path.rsplit("=", 1)[1])
         rows = spark.read.parquet(path).select(id_col, text_col)
         occ = gram_occurrences(span_tokenized(rows, id_col, text_col), n)
+        counts = occ.groupBy("__s").agg(
+            F.count_distinct("__id").cast("long").alias("__cnt")
+        ).withColumn("__bucket", F.xxhash64("__s"))
         # (0) coverage guard (round-12, advice r11): the retiring
         # epoch's POSITIVE delta must be IN the gram store before its
         # negative can publish. A crash between the epoch's rows commit
@@ -1650,43 +1629,17 @@ def enforce_retention_spanclean(
         # in OTHER epochs reads as released, and its next sighting lands
         # uncut, breaking the "every crash point degrades to
         # keep-suppressing" contract. Backfill here from the same raw
-        # text the heal derivation uses (idempotent: write_bucket_delta
-        # skips a committed _batch=eid).
-        if not _ranges_contain(_covered_bucket_ranges(grams_dir), eid):
-            write_bucket_delta(
-                occ.groupBy("__s")
-                .agg(F.count_distinct("__id").cast("long").alias("__cnt"))
-                .withColumn("__bucket", F.xxhash64("__s"))
-                .repartition(1),
-                grams_dir,
-                eid,
-                num_partitions=gram_partitions,
-            )
+        # text the heal derivation uses.
+        _backfill_positive(counts, grams_dir, eid, gram_partitions)
         # (1) negative delta from the epoch's raw text, into tmp
-        tmp = os.path.join(grams_dir, f"_retire_tmp_{eid}")
-        shutil.rmtree(tmp, ignore_errors=True)
-        neg = (
-            occ.groupBy("__s")
-            .agg((-F.count_distinct("__id")).cast("long").alias("__cnt"))
-            .withColumn("__bucket", F.xxhash64("__s"))
-            .withColumn(
-                "__bpart",
-                F.pmod(F.col("__bucket"), F.lit(gram_partitions)).cast("int"),
-            )
-            .repartition(1)
-            .sortWithinPartitions("__bpart")
+        _stage_retirement(
+            counts.withColumn("__cnt", -F.col("__cnt")), grams_dir, eid,
+            gram_partitions,
         )
-        neg.write.mode("overwrite").parquet(tmp)
         # (2) the epoch leaves the sink (sidecar first — orphaned
-        # sidecars must never outlive their epoch)
-        shutil.rmtree(
-            os.path.join(_ids_root(sink_dir), f"_batch={eid}"),
-            ignore_errors=True,
-        )
-        shutil.rmtree(path)
-        # (3) publish the release
-        _publish(tmp, eid)
-        removed.append(eid)
+        # sidecars must never outlive their epoch); (3) publish
+        removed.append(_drop_epoch(sink_dir, path))
+        _publish_retirement(grams_dir, eid)
     return removed
 
 
@@ -1899,12 +1852,7 @@ def keyed_upsert_insert(
                 target_partitions=fold_partitions,
             )
 
-    writer = stream_df.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_stream(stream_df, process, checkpoint_dir, trigger_once)
 
 
 def read_upserted(
@@ -2174,52 +2122,11 @@ def enforce_retention_tombstoned(
     delete one more epoch whose ids were never tombstoned, permanent
     dead width the tombstone can no longer record. Returns the epoch
     ids removed."""
-    import re
-    import shutil
-
-    doomed: list[str] = []
-    doomed_epochs: list[int] = []
-    if os.path.isdir(sink_dir):
-        dirs = []
-        for d in sorted(os.listdir(sink_dir)):
-            m = re.fullmatch(r"_batch=(\d+)", d)
-            if m:
-                path = os.path.join(sink_dir, d)
-                size = sum(
-                    os.path.getsize(os.path.join(path, f))
-                    for f in os.listdir(path)
-                    if os.path.isfile(os.path.join(path, f))
-                )
-                dirs.append((int(m.group(1)), path, size))
-        dirs.sort()
-        live = list(dirs)
-        while live:
-            over_count = max_batches is not None and len(live) > max_batches
-            over_bytes = (
-                max_bytes is not None
-                and sum(s for _, _, s in live) > max_bytes
-            )
-            if not (over_count or over_bytes):
-                break
-            epoch, path, _ = live.pop(0)
-            doomed.append(path)
-            doomed_epochs.append(epoch)
-    # only COMMITTED doomed epochs are readable (a crashed epoch's
-    # partial files have no rows a bucket store could reference anyway —
-    # the store is written after the sink commit)
-    doomed_committed = [
-        p for p in doomed if os.path.exists(os.path.join(p, "_SUCCESS"))
-    ]
-    if doomed_committed and os.path.isdir(os.path.join(sink_dir, "_buckets")):
+    doomed, survivors = _retention_walk(sink_dir, max_batches, max_bytes)
+    if doomed and os.path.isdir(os.path.join(sink_dir, "_buckets")):
         # both legs read NARROW: the per-epoch `_ids` sidecars where they
         # exist, the epochs' own id column where they don't
-        retired = _narrow_epoch_reads(
-            spark, sink_dir, doomed_committed, [id_col]
-        ).distinct()
-        survivors = [
-            p for _, p, _ in dirs if p not in doomed
-            and os.path.exists(os.path.join(p, "_SUCCESS"))
-        ]
+        retired = _narrow_epoch_reads(spark, sink_dir, doomed, [id_col]).distinct()
         if survivors:
             # size bound: an id also present in a SURVIVING epoch is not
             # retired. (The sink is still complete here — tombstone
@@ -2233,14 +2140,7 @@ def enforce_retention_tombstoned(
         retire_tombstone(
             spark, sink_dir, retired, id_col=id_col, verified=True
         )
-    for path, epoch in zip(doomed, doomed_epochs):
-        # id sidecar first — see enforce_retention for the crash ordering
-        shutil.rmtree(
-            os.path.join(_ids_root(sink_dir), f"_batch={epoch}"),
-            ignore_errors=True,
-        )
-        shutil.rmtree(path, ignore_errors=True)
-    return doomed_epochs
+    return [_drop_epoch(sink_dir, d) for d in doomed]
 
 
 def write_bucket_delta(
@@ -3114,12 +3014,7 @@ def near_dedup_insert(
             for df in reversed(persisted):
                 df.unpersist()
 
-    writer = stream_df.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_stream(stream_df, process, checkpoint_dir, trigger_once)
 
 
 def stream_interval_join(
@@ -4281,6 +4176,38 @@ def prune_bucket_store(
     )
 
 
+def _summary_insert(
+    stream_df: DataFrame,
+    sink_dir: str,
+    checkpoint_dir: str,
+    subdir: str,
+    build: Callable[[DataFrame], DataFrame],
+    transform: Callable[[DataFrame], DataFrame] | None,
+    trigger_once: bool,
+) -> StreamingQuery:
+    """The summary lanes' one body: each micro-batch (after ``transform``)
+    lands twice, both idempotently under the same epoch id — its rows
+    under ``<sink>/_batch=N`` and ``build(batch)``, the batch's bounded
+    summary DELTA, under ``<sink>/<subdir>/_batch=N``. A crashed epoch
+    re-runs and each half that already committed is skipped, so replay
+    never double-counts; readers merge the committed deltas on read.
+    The batch is persisted once for its two writes."""
+    write_rows = idempotent_batch_writer(sink_dir)
+    write_delta = idempotent_batch_writer(os.path.join(sink_dir, subdir))
+
+    def process(batch_df: DataFrame, epoch_id: int) -> None:
+        if transform is not None:
+            batch_df = transform(batch_df)
+        batch_df = batch_df.persist()
+        try:
+            write_rows(batch_df, epoch_id)
+            write_delta(build(batch_df), epoch_id)
+        finally:
+            batch_df.unpersist()
+
+    return _start_stream(stream_df, process, checkpoint_dir, trigger_once)
+
+
 def sketch_insert(
     stream_df: DataFrame,
     sink_dir: str,
@@ -4316,31 +4243,14 @@ def sketch_insert(
     """
     from confluent_kafka_vector_search_prompt_inference_spark.operators.sketches import countmin_build
 
-    write_rows = idempotent_batch_writer(sink_dir)
-    write_delta = idempotent_batch_writer(os.path.join(sink_dir, "_sketch"))
-
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        if transform is not None:
-            batch_df = transform(batch_df)
-        batch_df = batch_df.persist()
-        try:
-            write_rows(batch_df, epoch_id)
-            write_delta(
-                countmin_build(
-                    batch_df, term_col, depth=depth, width=width,
-                    weight_col=weight_col, group_cols=group_cols,
-                ),
-                epoch_id,
-            )
-        finally:
-            batch_df.unpersist()
-
-    writer = stream_df.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
+    return _summary_insert(
+        stream_df, sink_dir, checkpoint_dir, "_sketch",
+        lambda b: countmin_build(
+            b, term_col, depth=depth, width=width,
+            weight_col=weight_col, group_cols=group_cols,
+        ),
+        transform, trigger_once,
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_corpus_sketch(
@@ -4400,31 +4310,14 @@ def mg_insert(
     state."""
     from confluent_kafka_vector_search_prompt_inference_spark.operators.sketches import mg_sketch
 
-    write_rows = idempotent_batch_writer(sink_dir)
-    write_delta = idempotent_batch_writer(os.path.join(sink_dir, "_mg"))
-
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        if transform is not None:
-            batch_df = transform(batch_df)
-        batch_df = batch_df.persist()
-        try:
-            write_rows(batch_df, epoch_id)
-            write_delta(
-                mg_sketch(
-                    batch_df, item_col, k=k, group_cols=group_cols,
-                    max_groups_per_partition=max_groups_per_partition,
-                ).coalesce(1),
-                epoch_id,
-            )
-        finally:
-            batch_df.unpersist()
-
-    writer = stream_df.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
+    return _summary_insert(
+        stream_df, sink_dir, checkpoint_dir, "_mg",
+        lambda b: mg_sketch(
+            b, item_col, k=k, group_cols=group_cols,
+            max_groups_per_partition=max_groups_per_partition,
+        ).coalesce(1),
+        transform, trigger_once,
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_corpus_mg(
@@ -4488,30 +4381,11 @@ def bloom_insert(
     ``operators.membership.bloom_contains``."""
     from confluent_kafka_vector_search_prompt_inference_spark.operators.membership import bloom_build
 
-    write_rows = idempotent_batch_writer(sink_dir)
-    write_delta = idempotent_batch_writer(os.path.join(sink_dir, "_bloom"))
-
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        if transform is not None:
-            batch_df = transform(batch_df)
-        batch_df = batch_df.persist()
-        try:
-            write_rows(batch_df, epoch_id)
-            write_delta(
-                bloom_build(
-                    batch_df, key_col, m_bits=m_bits, k=k, set_cols=set_cols
-                ),
-                epoch_id,
-            )
-        finally:
-            batch_df.unpersist()
-
-    writer = stream_df.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
+    return _summary_insert(
+        stream_df, sink_dir, checkpoint_dir, "_bloom",
+        lambda b: bloom_build(b, key_col, m_bits=m_bits, k=k, set_cols=set_cols),
+        transform, trigger_once,
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_corpus_bloom(
@@ -4562,27 +4436,11 @@ def kmv_insert(
     changing any estimate."""
     from confluent_kafka_vector_search_prompt_inference_spark.operators.membership import kmv_sketch
 
-    write_rows = idempotent_batch_writer(sink_dir)
-    write_delta = idempotent_batch_writer(os.path.join(sink_dir, "_kmv"))
-
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        if transform is not None:
-            batch_df = transform(batch_df)
-        batch_df = batch_df.persist()
-        try:
-            write_rows(batch_df, epoch_id)
-            write_delta(
-                kmv_sketch(batch_df, key_col, k=k, set_cols=set_cols), epoch_id
-            )
-        finally:
-            batch_df.unpersist()
-
-    writer = stream_df.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
+    return _summary_insert(
+        stream_df, sink_dir, checkpoint_dir, "_kmv",
+        lambda b: kmv_sketch(b, key_col, k=k, set_cols=set_cols),
+        transform, trigger_once,
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_corpus_kmv(
@@ -4652,34 +4510,19 @@ def quantile_insert(
 
     if method not in ("bottom_m", "kll"):
         raise ValueError(f"method must be 'bottom_m' or 'kll', got {method!r}")
-    delta_sub = "_kllsketch" if method == "kll" else "_qsketch"
-    write_rows = idempotent_batch_writer(sink_dir)
-    write_delta = idempotent_batch_writer(os.path.join(sink_dir, delta_sub))
-
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        if transform is not None:
-            batch_df = transform(batch_df)
-        batch_df = batch_df.persist()
-        try:
-            write_rows(batch_df, epoch_id)
-            if method == "kll":
-                delta = kll_sketch_build(
-                    batch_df, value_col, key_col, k=m, group_cols=group_cols
-                )
-            else:
-                delta = quantile_sketch_build(
-                    batch_df, value_col, key_col, m=m, group_cols=group_cols
-                )
-            write_delta(delta, epoch_id)
-        finally:
-            batch_df.unpersist()
-
-    writer = stream_df.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
+    if method == "kll":
+        subdir = "_kllsketch"
+        build = lambda b: kll_sketch_build(  # noqa: E731
+            b, value_col, key_col, k=m, group_cols=group_cols
+        )
+    else:
+        subdir = "_qsketch"
+        build = lambda b: quantile_sketch_build(  # noqa: E731
+            b, value_col, key_col, m=m, group_cols=group_cols
+        )
+    return _summary_insert(
+        stream_df, sink_dir, checkpoint_dir, subdir, build, transform, trigger_once
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_corpus_quantile_sketch(
@@ -4793,12 +4636,7 @@ def ivf_insert(
             )
         assigned.write.partitionBy("ivf_cluster").mode("overwrite").parquet(target)
 
-    writer = stream_df.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_stream(stream_df, process, checkpoint_dir, trigger_once)
 
 
 def agg_insert(
@@ -4833,6 +4671,8 @@ def agg_insert(
     sketch deltas). For bit-exact float sums across refolds, aggregate
     integer units (cents/nanos — the repo-wide exactness convention);
     a DOUBLE sum's partial-merge order is batch-layout-dependent."""
+    import json
+
     from pyspark.sql import functions as F
 
     write_batch = idempotent_batch_writer(sink_dir)
@@ -4865,19 +4705,15 @@ def agg_insert(
         )
         write_batch(partial, epoch_id)
 
-    q = stream_df.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_once:
-        q = q.trigger(availableNow=True)
-    started = q.start()
-    # stash the merge plan for read_agg (sidecar metadata, engine-readable)
+    # the merge plan read_agg folds by, on disk whole before the first
+    # partial can commit (tmp + rename: a crash mid-write leaves the old
+    # plan or none, never a torn one)
     os.makedirs(sink_dir, exist_ok=True)
-    with open(os.path.join(sink_dir, "_merge_plan.json"), "w") as fh:
-        import json
-
+    plan_p = os.path.join(sink_dir, "_merge_plan.json")
+    with open(plan_p + ".tmp", "w") as fh:
         json.dump({"group_cols": group_cols, "merge": merge_plan}, fh)
-    return started
+    os.replace(plan_p + ".tmp", plan_p)
+    return _start_stream(stream_df, process, checkpoint_dir, trigger_once)
 
 
 def read_agg(spark: SparkSession, sink_dir: str) -> DataFrame:

@@ -40,7 +40,7 @@ def test_operator_persists_release(spark, docs):
     assert not preg._TRACKED
 
 
-def test_entry_release_covers_tracked(spark, docs):
+def test_entry_release_covers_tracked(spark, docs, sf_smoke):
     import __spark_entry__ as entry
 
     preg.release_tracked()
@@ -49,3 +49,14 @@ def test_entry_release_covers_tracked(spark, docs):
     assert len(preg._TRACKED) >= 2
     assert entry.release_persisted() >= 2
     assert not preg._TRACKED
+
+    # the entry module's own persists share the registry: q15's totals
+    # subtree is tracked, and release_persisted() drops it
+    out = entry.q15_top_supplier(spark, sf_smoke)
+    out.collect()
+    assert len(preg._TRACKED) == 1
+    totals = preg._TRACKED[0]
+    assert totals.storageLevel.useMemory or totals.storageLevel.useDisk
+    assert entry.release_persisted() == 1
+    assert not preg._TRACKED
+    assert totals.storageLevel == StorageLevel(False, False, False, False, 1)

@@ -394,6 +394,59 @@ def test_sink_retention_by_count_and_bytes(spark, tmp_path):
     assert read_sink(spark, sink).count() == 200
 
 
+def _fake_epoch(sink, epoch, *, committed=True, part=None, nbytes=1000):
+    """A hand-built sink epoch: one ``nbytes`` data file, under a
+    ``part`` partition subdir when given (the ``ivf_insert`` /
+    ``partition_by`` layout), stamped ``_SUCCESS`` when committed."""
+    d = os.path.join(sink, f"_batch={epoch}")
+    leaf = os.path.join(d, part) if part else d
+    os.makedirs(leaf)
+    with open(os.path.join(leaf, "part-0.parquet"), "wb") as fh:
+        fh.write(b"x" * nbytes)
+    if committed:
+        open(os.path.join(d, "_SUCCESS"), "a").close()
+    return d
+
+
+def _retire(kind, spark, sink, **budget):
+    from confluent_kafka_vector_search_prompt_inference_spark.streaming.pipeline import (
+        enforce_retention,
+        enforce_retention_tombstoned,
+    )
+
+    if kind == "plain":
+        return enforce_retention(sink, **budget)
+    return enforce_retention_tombstoned(spark, sink, id_col="doc_id", **budget)
+
+
+@pytest.mark.parametrize("kind", ["plain", "tombstoned"])
+def test_retention_byte_budget_weighs_partitioned_epochs(spark, tmp_path, kind):
+    """An epoch's bytes include its partition subdirs: an ``ivf_insert``
+    corpus (``_batch=N/ivf_cluster=k/``) or a ``partition_by`` fold
+    holds every data file one level down, and weighing only top-level
+    files made such a store weigh 0 bytes — never retired by bytes."""
+    sink = str(tmp_path / "sink")
+    for e in range(3):
+        _fake_epoch(sink, e, part="ivf_cluster=0")
+    assert _retire(kind, spark, sink, max_bytes=1500) == [0, 1]
+    assert sorted(os.listdir(sink)) == ["_batch=2"]
+
+
+@pytest.mark.parametrize("kind", ["plain", "tombstoned"])
+def test_retention_ignores_in_flight_epoch(spark, tmp_path, kind):
+    """An epoch dir without ``_SUCCESS`` is in flight (or crashed before
+    commit): ``read_sink`` never shows it, so it neither counts toward
+    the budget nor is deleted — the live stream may be writing it."""
+    sink = str(tmp_path / "sink")
+    _fake_epoch(sink, 0)
+    _fake_epoch(sink, 1)
+    inflight = _fake_epoch(sink, 2, committed=False)
+    before = sorted(os.listdir(inflight))
+    assert _retire(kind, spark, sink, max_batches=2) == []
+    assert sorted(os.listdir(sink)) == ["_batch=0", "_batch=1", "_batch=2"]
+    assert sorted(os.listdir(inflight)) == before
+
+
 @pytest.mark.slow
 def test_stateful_transition_steps_match_batch_lag(spark, tmp_path):
     """Streaming transition mining with cross-batch keyed state equals the
@@ -758,6 +811,64 @@ def test_sketch_deltas_compact_without_changing_estimates(spark, tmp_path, docs)
     assert before == after
 
 
+_SUMMARY_LANES = {
+    "sketch": ("sketch_insert", "_sketch", dict(term_col="k", depth=2, width=64)),
+    "mg": ("mg_insert", "_mg", dict(item_col="k", k=8)),
+    "bloom": ("bloom_insert", "_bloom", dict(key_col="k", m_bits=1024, k=3)),
+    "kmv": ("kmv_insert", "_kmv", dict(key_col="k", k=16)),
+    "quantile": ("quantile_insert", "_qsketch", dict(value_col="v", key_col="id", m=32)),
+    "kll": (
+        "quantile_insert", "_kllsketch",
+        dict(value_col="v", key_col="id", m=32, method="kll"),
+    ),
+}
+
+
+def _tree(root):
+    return sorted(
+        os.path.relpath(os.path.join(d, f), root)
+        for d, _, files in os.walk(root)
+        for f in files
+    )
+
+
+@pytest.mark.parametrize("lane", list(_SUMMARY_LANES))
+def test_summary_lane_lands_rows_and_delta_replay_safe(spark, tmp_path, lane):
+    """Every summary lane lands each epoch's rows under ``_batch=N`` and
+    its summary delta under the lane's own subdir (the on-disk names
+    existing stores are read by); a replay over the same source with a
+    FRESH checkpoint re-delivers the same epoch ids and lands nothing —
+    no row, no delta dir, no file."""
+    from confluent_kafka_vector_search_prompt_inference_spark.streaming import pipeline
+    from confluent_kafka_vector_search_prompt_inference_spark.streaming.pipeline import _committed_batch_dirs
+
+    fn_name, subdir, kw = _SUMMARY_LANES[lane]
+    lane_fn = getattr(pipeline, fn_name)
+    rows = spark.range(90).select(
+        "id",
+        F.concat(F.lit("k-"), (F.col("id") % 30).cast("string")).alias("k"),
+        (F.col("id") * 1.5).alias("v"),
+    )
+    src = str(tmp_path / "src")
+    rows.repartition(2).write.parquet(src)
+    sink = str(tmp_path / "sink")
+
+    def run(ckpt):
+        stream = file_stream_reader(spark, src, rows.schema, max_files_per_trigger=1)
+        _drain(lane_fn(stream, sink, str(tmp_path / ckpt), trigger_once=True, **kw))
+
+    run("ckpt")
+    assert read_sink(spark, sink).count() == 90
+    assert {n for n in os.listdir(sink) if not n.startswith("_batch=")} == {subdir}
+    deltas = [os.path.basename(d) for d in _committed_batch_dirs(os.path.join(sink, subdir))]
+    assert deltas == ["_batch=0", "_batch=1"]
+
+    landed = _tree(sink)
+    run("ckpt_fresh")
+    assert _tree(sink) == landed
+    assert read_sink(spark, sink).count() == 90
+
+
 def test_ivf_insert_streaming_indexed_corpus(spark, tmp_path):
     """The always-indexed, continuously-inserted lifecycle: a vector
     stream lands as an IVF index (centroids trained on the first batch,
@@ -860,6 +971,30 @@ def test_agg_insert_folds_to_batch_aggregate(spark, tmp_path, events_dir):
         for r in read_agg(spark, sink).collect()
     }
     assert again == want
+
+
+def test_agg_insert_writes_merge_plan_before_start(tmp_path):
+    """The merge plan ``read_agg`` needs is on disk, whole, before the
+    stream starts: a start that fails still leaves a parseable plan and
+    no staging file."""
+    import json
+
+    from confluent_kafka_vector_search_prompt_inference_spark.streaming.pipeline import agg_insert
+
+    class _NoStart:
+        @property
+        def writeStream(self):
+            raise RuntimeError("start failed")
+
+    sink = str(tmp_path / "aggsink")
+    with pytest.raises(RuntimeError, match="start failed"):
+        agg_insert(
+            _NoStart(), sink, str(tmp_path / "ckpt"),
+            group_cols=["event_type"], agg_exprs={"n": "count"},
+        )
+    with open(os.path.join(sink, "_merge_plan.json")) as fh:
+        assert json.load(fh) == {"group_cols": ["event_type"], "merge": {"n": "sum"}}
+    assert os.listdir(sink) == ["_merge_plan.json"]
 
 
 def test_agg_insert_rejects_nondecomposable(spark, tmp_path, events_dir):
