@@ -5,17 +5,23 @@ The reference calls OpenAI over HTTPS per row (embedding request
 ``README.md:649-653``) and warns that live embeddings are nondeterministic
 for identical input (``README.md:170``). Tests therefore use hermetic
 deterministic providers with the same signatures; the HTTP provider is the
-drop-in for live use and is Arrow-batched — one request per batch of rows,
-not per row, the single most important deviation from the reference's
-row-at-a-time model at 100 TB scale (SURVEY.md §3 entry point B).
+drop-in for live use. Its embeddings are Arrow-batched — one request per
+batch of rows, not per row, the single most important deviation from the
+reference's row-at-a-time model at 100 TB scale (SURVEY.md §3 entry point
+B). Chat completions are still one request per row: the chat API takes one
+conversation per call.
 """
 
 from __future__ import annotations
 
+import datetime
+import email.utils
 import hashlib
 import json
 import math
+import random
 import struct
+import time
 from collections.abc import Sequence
 from dataclasses import dataclass, field
 from functools import lru_cache
@@ -115,15 +121,51 @@ class TemplateLLM(Provider):
         return out
 
 
+# first backoff ceiling without a Retry-After; doubles per attempt
+_BACKOFF_BASE_S = 1.0
+
+
+def _retry_after_s(value: str | None) -> float | None:
+    """Seconds a ``Retry-After`` header value asks to wait: delay-seconds
+    (fractions accepted) or an HTTP-date, never below 0. ``None`` when the
+    header is missing or unreadable."""
+    if not value:
+        return None
+    try:
+        secs = float(value)
+    except ValueError:
+        try:
+            when = email.utils.parsedate_to_datetime(value)
+        except (TypeError, ValueError):
+            return None
+        if when.tzinfo is None:  # "-0000": UTC, as every HTTP-date is
+            when = when.replace(tzinfo=datetime.timezone.utc)
+        secs = when.timestamp() - time.time()
+    return max(0.0, secs) if math.isfinite(secs) else None
+
+
 @dataclass
 class HttpChatProvider(Provider):
     """Live OpenAI-compatible provider (embeddings + chat).
 
     Request/response contracts follow the reference's captured payloads
     (``files/sampleVectorSearches/test.txt``; request ``README.md:123-127``,
-    ``README.md:636-645``). Batched per Arrow batch with bounded retry.
-    Network access is environment-dependent, so construction is lazy and
-    tests never instantiate it."""
+    ``README.md:636-645``). Embeddings are batched per Arrow batch; chat is
+    one request per row. Construction is lazy: nothing connects until the
+    first call.
+
+    Retry policy: a call makes at most ``max_retries`` requests, and no
+    wait between them exceeds ``timeout_s``.
+
+    - ``429`` and ``5xx``: wait the server's ``Retry-After`` (seconds or an
+      HTTP-date); without one, back off exponentially with full jitter.
+    - Any other ``4xx`` (a bad request or key, a missing model): raise at
+      once; the same request would fail the same way again.
+    - Connection-level failures (refused, reset, timed out, closed before
+      or while answering): back off with jitter as for a bare ``5xx``.
+
+    A micro-batch commits only when its slowest task ends, so a wait longer
+    than the server asked for stalls the whole stream."""
 
     endpoint: str = ""
     api_key_env: str = "OPENAI_API_KEY"
@@ -141,8 +183,8 @@ class HttpChatProvider(Provider):
         return self._session
 
     def _post(self, url: str, payload: dict) -> dict:
+        import http.client
         import os
-        import time
         import urllib.error
 
         req = self._http().Request(
@@ -153,16 +195,26 @@ class HttpChatProvider(Provider):
                 "Authorization": f"Bearer {os.environ.get(self.api_key_env, '')}",
             },
         )
-        delay = 1.0
         for attempt in range(self.max_retries):
+            last = attempt == self.max_retries - 1
             try:
                 with self._http().urlopen(req, timeout=self.timeout_s) as resp:
                     return json.loads(resp.read())
-            except urllib.error.URLError:
-                if attempt == self.max_retries - 1:
+            except urllib.error.HTTPError as e:
+                e.close()
+                if last or not (e.code == 429 or e.code >= 500):
                     raise
-                time.sleep(delay)
-                delay *= 2
+                wait = _retry_after_s(e.headers.get("Retry-After"))
+            except (OSError, http.client.HTTPException):
+                # URLError (refused, DNS, a failed send) and what urllib
+                # lets through unwrapped from reading the answer: a
+                # RemoteDisconnected, a read timeout, a truncated body
+                if last:
+                    raise
+                wait = None
+            if wait is None:
+                wait = random.uniform(0.0, _BACKOFF_BASE_S * 2**attempt)
+            time.sleep(min(wait, self.timeout_s))
         raise RuntimeError("unreachable")
 
     def embed_batch(self, texts: Sequence[str]) -> list[list[float]]:

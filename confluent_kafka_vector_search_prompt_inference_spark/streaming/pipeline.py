@@ -4603,38 +4603,48 @@ def ivf_insert(
             return  # replay of a committed epoch
         spark = batch_df.sparkSession
         cent_path = os.path.join(index_path, "centroids")
-        if not os.path.exists(cent_path):
-            # first batch: train + persist centroids (and reuse the
-            # assignment build_ivf_index already computed)
-            indexed, centroids = build_ivf_index(
-                batch_df, vec_col, n_clusters=n_clusters, seed=seed
-            )
-            # save_ivf_index would also write the corpus in the flat
-            # layout; here only the centroid table is wanted
-            import pandas as pd
+        first = not os.path.exists(cent_path)
+        if first:
+            # training samples the batch and the write reads it again:
+            # cache it for the epoch, so an upstream embedding UDF runs
+            # (and bills) once per row and a nondeterministic embedder's
+            # centroids are trained on the vectors that are stored
+            batch_df.persist()
+        try:
+            if first:
+                # train + persist centroids (and reuse the assignment
+                # build_ivf_index already computed)
+                assigned, centroids = build_ivf_index(
+                    batch_df, vec_col, n_clusters=n_clusters, seed=seed
+                )
+                # save_ivf_index would also write the corpus in the flat
+                # layout; here only the centroid table is wanted
+                import pandas as pd
 
-            cent_pdf = pd.DataFrame(
-                {
-                    "cluster_id": [int(i) for i in range(len(centroids))],
-                    "centroid": [[float(x) for x in c] for c in centroids],
-                }
-            )
-            spark.createDataFrame(
-                cent_pdf, schema="cluster_id int, centroid array<double>"
-            ).coalesce(1).write.mode("overwrite").parquet(cent_path)
-            assigned = indexed
-        else:
-            rows = (
-                spark.read.parquet(cent_path).orderBy("cluster_id").collect()
-            )
-            centroids = np.asarray(
-                [np.asarray(r.centroid, dtype=np.float64) for r in rows]
-            )
-            assign = _nearest_clusters_udf(centroids, n_probe=1)
-            assigned = batch_df.withColumn(
-                "ivf_cluster", F.element_at(assign(F.col(vec_col)), 1)
-            )
-        assigned.write.partitionBy("ivf_cluster").mode("overwrite").parquet(target)
+                cent_pdf = pd.DataFrame(
+                    {
+                        "cluster_id": [int(i) for i in range(len(centroids))],
+                        "centroid": [[float(x) for x in c] for c in centroids],
+                    }
+                )
+                spark.createDataFrame(
+                    cent_pdf, schema="cluster_id int, centroid array<double>"
+                ).coalesce(1).write.mode("overwrite").parquet(cent_path)
+            else:
+                rows = (
+                    spark.read.parquet(cent_path).orderBy("cluster_id").collect()
+                )
+                centroids = np.asarray(
+                    [np.asarray(r.centroid, dtype=np.float64) for r in rows]
+                )
+                assign = _nearest_clusters_udf(centroids, n_probe=1)
+                assigned = batch_df.withColumn(
+                    "ivf_cluster", F.element_at(assign(F.col(vec_col)), 1)
+                )
+            assigned.write.partitionBy("ivf_cluster").mode("overwrite").parquet(target)
+        finally:
+            if first:
+                batch_df.unpersist()
 
     return _start_stream(stream_df, process, checkpoint_dir, trigger_once)
 
@@ -4670,7 +4680,11 @@ def agg_insert(
     ``compact_sink`` + re-fold (cells are additive, same argument as the
     sketch deltas). For bit-exact float sums across refolds, aggregate
     integer units (cents/nanos — the repo-wide exactness convention);
-    a DOUBLE sum's partial-merge order is batch-layout-dependent."""
+    a DOUBLE sum's partial-merge order is batch-layout-dependent.
+
+    The sink records its ``group_cols`` and merge plan on first start; a
+    later start asking for another plan raises ``ValueError`` before the
+    stream starts."""
     import json
 
     from pyspark.sql import functions as F
@@ -4706,13 +4720,24 @@ def agg_insert(
         write_batch(partial, epoch_id)
 
     # the merge plan read_agg folds by, on disk whole before the first
-    # partial can commit (tmp + rename: a crash mid-write leaves the old
-    # plan or none, never a torn one)
-    os.makedirs(sink_dir, exist_ok=True)
+    # partial can commit (tmp + rename: a crash mid-write leaves no plan,
+    # never a torn one). A sink keeps the plan its partials were built
+    # with: folding them by another one reads back wrong values
+    plan = {"group_cols": list(group_cols), "merge": merge_plan}
     plan_p = os.path.join(sink_dir, "_merge_plan.json")
-    with open(plan_p + ".tmp", "w") as fh:
-        json.dump({"group_cols": group_cols, "merge": merge_plan}, fh)
-    os.replace(plan_p + ".tmp", plan_p)
+    if os.path.exists(plan_p):
+        with open(plan_p) as fh:
+            recorded = json.load(fh)
+        if recorded != plan:
+            raise ValueError(
+                f"agg_insert: sink {sink_dir} holds partials of merge plan "
+                f"{recorded}, but this start asks for {plan}; use a new sink"
+            )
+    else:
+        os.makedirs(sink_dir, exist_ok=True)
+        with open(plan_p + ".tmp", "w") as fh:
+            json.dump(plan, fh)
+        os.replace(plan_p + ".tmp", plan_p)
     return _start_stream(stream_df, process, checkpoint_dir, trigger_once)
 
 

@@ -4,17 +4,25 @@ ALTER default (README.md:712-714), DESCRIBE (README.md:660-699), 404 on
 missing version (README.md:657), golden provider-response parsing
 (files/sampleVectorSearches/test.txt)."""
 
+import email.utils
 import json
 import os
+import threading
+import time
+import types
+import urllib.error
+from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 import pytest
 
 from confluent_kafka_vector_search_prompt_inference_spark.models import (
     HashingEmbedder,
+    HttpChatProvider,
     ModelNotFound,
     ModelRegistry,
     TemplateLLM,
     parse_embedding_response,
+    providers,
 )
 
 GOLDEN = os.path.join(os.path.dirname(__file__), "fixtures", "embedding_response_golden.json")
@@ -106,3 +114,141 @@ def test_all_golden_payloads_parse():
         with open(path) as f:
             vecs = parse_embedding_response(f.read())
         assert len(vecs) == 1 and len(vecs[0]) == 1536
+
+
+# --- HttpChatProvider retry policy, against a scripted local server ---
+
+_HANG_UP = "hang up"  # close the connection without answering
+_STALL = "stall"  # answer nothing for 0.5 s, then hang up
+
+
+class _ScriptedServer(ThreadingHTTPServer):
+    """Answers the n-th POST with ``replies[n]`` (the last one repeats):
+    ``(status, headers)``, :data:`_HANG_UP` or :data:`_STALL`."""
+
+    daemon_threads = True
+
+    def __init__(self, replies):
+        super().__init__(("127.0.0.1", 0), _ScriptedHandler)
+        self.replies = list(replies)
+        self.requests = 0
+        self.lock = threading.Lock()
+
+
+class _ScriptedHandler(BaseHTTPRequestHandler):
+    protocol_version = "HTTP/1.1"
+    server: _ScriptedServer
+
+    def log_message(self, *args):
+        pass
+
+    def do_POST(self):
+        self.rfile.read(int(self.headers.get("Content-Length", 0)))
+        srv = self.server
+        with srv.lock:
+            srv.requests += 1
+            reply = srv.replies[min(srv.requests, len(srv.replies)) - 1]
+        if reply in (_HANG_UP, _STALL):
+            if reply == _STALL:
+                time.sleep(0.5)
+            self.close_connection = True
+            return
+        status, headers = reply
+        body = {"data": [{"index": 0, "embedding": [1.0, 0.0]}]} if status == 200 else {}
+        payload = json.dumps(body).encode()
+        self.send_response(status)
+        self.send_header("Content-Type", "application/json")
+        self.send_header("Content-Length", str(len(payload)))
+        for k, v in headers.items():
+            self.send_header(k, v)
+        self.end_headers()
+        self.wfile.write(payload)
+
+
+@pytest.fixture()
+def scripted():
+    """``scripted(*replies)`` → (server, endpoint URL); stopped after the test."""
+    servers = []
+
+    def start(*replies):
+        srv = _ScriptedServer(replies)
+        threading.Thread(target=srv.serve_forever, kwargs={"poll_interval": 0.05},
+                         daemon=True).start()
+        servers.append(srv)
+        return srv, f"http://127.0.0.1:{srv.server_address[1]}"
+
+    yield start
+    for srv in servers:
+        srv.shutdown()
+        srv.server_close()
+
+
+@pytest.fixture()
+def waits(monkeypatch):
+    """The client's retry waits, recorded instead of slept."""
+    seen = []
+    monkeypatch.setattr(providers, "time", types.SimpleNamespace(sleep=seen.append,
+                                                                 time=time.time))
+    return seen
+
+
+def test_http_429_waits_retry_after_not_a_fixed_second(scripted):
+    srv, url = scripted((429, {"Retry-After": "0.05"}), (200, {}))
+    t0 = time.perf_counter()
+    assert HttpChatProvider(endpoint=url).embed_batch(["a"]) == [[1.0, 0.0]]
+    assert time.perf_counter() - t0 < 0.5
+    assert srv.requests == 2
+
+
+@pytest.mark.parametrize("status", [400, 401, 403, 404])
+def test_http_other_4xx_fails_on_first_response(scripted, waits, status):
+    srv, url = scripted((status, {}))
+    with pytest.raises(urllib.error.HTTPError) as e:
+        HttpChatProvider(endpoint=url, max_retries=3).embed_batch(["a"])
+    assert e.value.code == status
+    assert srv.requests == 1 and waits == []
+
+
+def test_http_5xx_exhausts_retries_with_capped_jittered_backoff(scripted, waits):
+    srv, url = scripted((500, {}))
+    with pytest.raises(urllib.error.HTTPError) as e:
+        HttpChatProvider(endpoint=url, max_retries=4, timeout_s=0.2).embed_batch(["a"])
+    assert e.value.code == 500
+    assert srv.requests == 4
+    assert len(waits) == 3 and all(0.0 <= w <= 0.2 for w in waits)
+
+
+def test_http_retry_after_capped_at_timeout(scripted, waits):
+    srv, url = scripted((429, {"Retry-After": "120"}), (200, {}))
+    assert HttpChatProvider(endpoint=url, timeout_s=0.2).embed_batch(["a"]) == [[1.0, 0.0]]
+    assert waits == [0.2] and srv.requests == 2
+
+
+def test_http_retry_after_http_date(scripted, waits):
+    date = email.utils.formatdate(time.time() + 30, usegmt=True)
+    srv, url = scripted((503, {"Retry-After": date}), (200, {}))
+    assert HttpChatProvider(endpoint=url, timeout_s=60).embed_batch(["a"]) == [[1.0, 0.0]]
+    assert len(waits) == 1 and 28 <= waits[0] <= 30
+
+
+def test_retry_after_values(monkeypatch):
+    date = "Wed, 21 Oct 2015 07:28:00 GMT"
+    at = email.utils.parsedate_to_datetime(date).timestamp()
+    for now, want in ((at - 12.5, 12.5), (at + 60, 0.0)):
+        monkeypatch.setattr(providers, "time", types.SimpleNamespace(time=lambda: now))
+        assert providers._retry_after_s(date) == want
+        assert providers._retry_after_s(date.replace("GMT", "-0000")) == want
+    assert providers._retry_after_s("0.05") == 0.05
+    assert providers._retry_after_s("-3") == 0.0
+    for bad in (None, "", "soon", "nan", "inf"):
+        assert providers._retry_after_s(bad) is None
+
+
+@pytest.mark.parametrize("first", [_HANG_UP, _STALL])
+def test_http_retries_a_connection_dropped_before_the_answer(scripted, waits, first):
+    """``urllib`` wraps only send errors in ``URLError``: a server that
+    hangs up (``RemoteDisconnected``) or stalls past the timeout
+    (``TimeoutError``) while the answer is read must be retried too."""
+    srv, url = scripted(first, (200, {}))
+    assert HttpChatProvider(endpoint=url, timeout_s=0.2).embed_batch(["a"]) == [[1.0, 0.0]]
+    assert srv.requests == 2 and len(waits) == 1

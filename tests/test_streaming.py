@@ -920,6 +920,49 @@ def test_ivf_insert_streaming_indexed_corpus(spark, tmp_path):
     assert corpus3.filter(F.col("cid") < 2).count() == 0
 
 
+def test_ivf_insert_embeds_each_feed_row_once(spark, tmp_path):
+    """The first micro-batch trains the centroids on a sample and is then
+    written: an upstream embedding UDF must run once per row, not once
+    per read (a live embedder bills every call, and a nondeterministic one
+    would train the centroids on other vectors than the stored ones)."""
+    from confluent_kafka_vector_search_prompt_inference_spark.models import Provider
+    from confluent_kafka_vector_search_prompt_inference_spark.operators.ivf import load_ivf_index
+    from confluent_kafka_vector_search_prompt_inference_spark.streaming.pipeline import ivf_insert
+
+    calls = str(tmp_path / "embed_calls.txt")
+
+    class CountingEmbedder(Provider):
+        """Appends one line per embedded row to ``calls``."""
+
+        deterministic = False
+
+        def embed_batch(self, texts):
+            with open(calls, "a") as fh:
+                fh.write("".join(f"{t}\n" for t in texts))
+            return HashingEmbedder(dim=8).embed_batch(texts)
+
+    feed = spark.createDataFrame(
+        [(i, f"listing {i} colour {i % 7} size {i % 5}") for i in range(60)],
+        "pid long, content string",
+    )
+    src = str(tmp_path / "feed")
+    feed.repartition(2).write.parquet(src)
+    reg = ModelRegistry()
+    reg.create_model("vector_encoding", "embedding", CountingEmbedder())
+    stream = reg.ml_predict(
+        file_stream_reader(spark, src, feed.schema, max_files_per_trigger=1),
+        "vector_encoding", "content",
+    )
+    idx = str(tmp_path / "ivf")
+    _drain(ivf_insert(stream, idx, str(tmp_path / "ckpt"), n_clusters=4,
+                      trigger_once=True))
+
+    corpus, _ = load_ivf_index(spark, idx)
+    assert corpus.count() == 60
+    with open(calls) as fh:
+        assert sorted(fh.read().splitlines()) == sorted(r.content for r in feed.collect())
+
+
 def test_agg_insert_folds_to_batch_aggregate(spark, tmp_path, events_dir):
     """The continuously-maintained aggregate equals the one-shot batch
     aggregate over everything streamed, for count/sum/min/max; replay
@@ -995,6 +1038,25 @@ def test_agg_insert_writes_merge_plan_before_start(tmp_path):
     with open(os.path.join(sink, "_merge_plan.json")) as fh:
         assert json.load(fh) == {"group_cols": ["event_type"], "merge": {"n": "sum"}}
     assert os.listdir(sink) == ["_merge_plan.json"]
+
+
+def test_agg_insert_refuses_another_merge_plan(spark, tmp_path, events_dir):
+    """A sink's partials fold only by the plan they were built with: a
+    start asking for another plan fails before it starts, naming both."""
+    from confluent_kafka_vector_search_prompt_inference_spark.streaming.pipeline import agg_insert, read_agg
+
+    src, schema, n = events_dir
+    stream = file_stream_reader(spark, src, schema, max_files_per_trigger=1)
+    sink, ckpt = str(tmp_path / "aggsink"), str(tmp_path / "ckpt")
+    _drain(agg_insert(stream, sink, ckpt, group_cols=["event_type"],
+                      agg_exprs={"n": "count"}, trigger_once=True))
+    with pytest.raises(ValueError, match=r"'n': 'sum'.*'n': 'max'"):
+        agg_insert(stream, sink, ckpt, group_cols=["event_type"],
+                   agg_exprs={"n": "max(value)"}, trigger_once=True)
+    with pytest.raises(ValueError, match="group_cols"):
+        agg_insert(stream, sink, ckpt, group_cols=["user_id"],
+                   agg_exprs={"n": "count"}, trigger_once=True)
+    assert sum(r.n for r in read_agg(spark, sink).collect()) == n
 
 
 def test_agg_insert_rejects_nondecomposable(spark, tmp_path, events_dir):
