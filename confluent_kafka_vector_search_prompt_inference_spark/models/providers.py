@@ -201,10 +201,11 @@ class HttpChatProvider(Provider):
                 with self._http().urlopen(req, timeout=self.timeout_s) as resp:
                     return json.loads(resp.read())
             except urllib.error.HTTPError as e:
-                e.close()
+                # raised still open: the caller can read the server's reason
                 if last or not (e.code == 429 or e.code >= 500):
                     raise
                 wait = _retry_after_s(e.headers.get("Retry-After"))
+                e.close()
             except (OSError, http.client.HTTPException):
                 # URLError (refused, DNS, a failed send) and what urllib
                 # lets through unwrapped from reading the answer: a

@@ -4682,9 +4682,13 @@ def agg_insert(
     integer units (cents/nanos — the repo-wide exactness convention);
     a DOUBLE sum's partial-merge order is batch-layout-dependent.
 
-    The sink records its ``group_cols`` and merge plan on first start; a
-    later start asking for another plan raises ``ValueError`` before the
-    stream starts."""
+    The sink records its ``group_cols`` and merge plan. Once a partial
+    has committed, a start asking for another plan raises ``ValueError``
+    before the stream starts; until then each start re-records its own
+    plan, so a start that failed (say, on a non-decomposable spec, which
+    fails inside the first batch) can be retried with a corrected one.
+    The plan holds merge functions only: ``count`` and ``sum(col)`` both
+    merge by ``sum``, so swapping one for the other is not detected."""
     import json
 
     from pyspark.sql import functions as F
@@ -4721,23 +4725,25 @@ def agg_insert(
 
     # the merge plan read_agg folds by, on disk whole before the first
     # partial can commit (tmp + rename: a crash mid-write leaves no plan,
-    # never a torn one). A sink keeps the plan its partials were built
-    # with: folding them by another one reads back wrong values
+    # never a torn one). A sink with committed partials keeps the plan
+    # they were built with: folding them by another one reads back wrong
+    # values. A plan no partial was built with is simply replaced
     plan = {"group_cols": list(group_cols), "merge": merge_plan}
     plan_p = os.path.join(sink_dir, "_merge_plan.json")
-    if os.path.exists(plan_p):
+    recorded = None
+    if _committed_batch_dirs(sink_dir) and os.path.exists(plan_p):
         with open(plan_p) as fh:
             recorded = json.load(fh)
-        if recorded != plan:
-            raise ValueError(
-                f"agg_insert: sink {sink_dir} holds partials of merge plan "
-                f"{recorded}, but this start asks for {plan}; use a new sink"
-            )
-    else:
+    if recorded is None:
         os.makedirs(sink_dir, exist_ok=True)
         with open(plan_p + ".tmp", "w") as fh:
             json.dump(plan, fh)
         os.replace(plan_p + ".tmp", plan_p)
+    elif recorded != plan:
+        raise ValueError(
+            f"agg_insert: sink {sink_dir} holds partials of merge plan "
+            f"{recorded}, but this start asks for {plan}; use a new sink"
+        )
     return _start_stream(stream_df, process, checkpoint_dir, trigger_once)
 
 

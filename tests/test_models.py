@@ -154,7 +154,10 @@ class _ScriptedHandler(BaseHTTPRequestHandler):
             self.close_connection = True
             return
         status, headers = reply
-        body = {"data": [{"index": 0, "embedding": [1.0, 0.0]}]} if status == 200 else {}
+        if status == 200:
+            body = {"data": [{"index": 0, "embedding": [1.0, 0.0]}]}
+        else:
+            body = {"error": {"message": f"status {status}"}}
         payload = json.dumps(body).encode()
         self.send_response(status)
         self.send_header("Content-Type", "application/json")
@@ -206,6 +209,7 @@ def test_http_other_4xx_fails_on_first_response(scripted, waits, status):
     with pytest.raises(urllib.error.HTTPError) as e:
         HttpChatProvider(endpoint=url, max_retries=3).embed_batch(["a"])
     assert e.value.code == status
+    assert json.loads(e.value.read()) == {"error": {"message": f"status {status}"}}
     assert srv.requests == 1 and waits == []
 
 
@@ -214,6 +218,7 @@ def test_http_5xx_exhausts_retries_with_capped_jittered_backoff(scripted, waits)
     with pytest.raises(urllib.error.HTTPError) as e:
         HttpChatProvider(endpoint=url, max_retries=4, timeout_s=0.2).embed_batch(["a"])
     assert e.value.code == 500
+    assert json.loads(e.value.read()) == {"error": {"message": "status 500"}}
     assert srv.requests == 4
     assert len(waits) == 3 and all(0.0 <= w <= 0.2 for w in waits)
 

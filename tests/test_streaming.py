@@ -1059,6 +1059,31 @@ def test_agg_insert_refuses_another_merge_plan(spark, tmp_path, events_dir):
     assert sum(r.n for r in read_agg(spark, sink).collect()) == n
 
 
+def test_agg_insert_restarts_a_failed_start_with_another_plan(spark, tmp_path, events_dir):
+    """A start that failed before any partial committed leaves a plan
+    that no partial was built with: a corrected start on the same sink
+    and checkpoint replaces it and folds everything."""
+    from confluent_kafka_vector_search_prompt_inference_spark.streaming.pipeline import agg_insert, read_agg
+
+    src, schema, _ = events_dir
+    stream = file_stream_reader(spark, src, schema, max_files_per_trigger=1)
+    sink, ckpt = str(tmp_path / "aggsink"), str(tmp_path / "ckpt")
+    q = agg_insert(stream, sink, ckpt, group_cols=["event_type"],
+                   agg_exprs={"total": "avg(value)"}, trigger_once=True)
+    with pytest.raises(Exception, match="decomposable|avg"):
+        q.awaitTermination(60)
+        raise RuntimeError("expected stream failure for avg")
+    _drain(agg_insert(stream, sink, ckpt, group_cols=["event_type"],
+                      agg_exprs={"total": "sum(value)"}, trigger_once=True))
+    got = {r.event_type: round(r.total, 6) for r in read_agg(spark, sink).collect()}
+    want = {
+        r.event_type: round(r.total, 6)
+        for r in spark.read.parquet(src).groupBy("event_type")
+        .agg(F.sum("value").alias("total")).collect()
+    }
+    assert got == want
+
+
 def test_agg_insert_rejects_nondecomposable(spark, tmp_path, events_dir):
     from confluent_kafka_vector_search_prompt_inference_spark.streaming.pipeline import agg_insert
 
