@@ -1,23 +1,25 @@
-"""Seeded oracle-parity sample: driver-window insurance.
+"""Oracle-parity samples of the tail: driver-window insurance.
 
 The driver's correctness gate hashes only the FIRST 50 ``queries()``
 entries; positions 51+ are verified by ``tools/parity.py`` runs, which
-happen between rounds, not in CI. This test closes that gap: every
-pytest run re-verifies a pseudo-random 20-query sample drawn from the
+happen between rounds, not in CI. This module closes that gap: every
+pytest run re-verifies two disjoint 20-query samples drawn from the
 entries OUTSIDE the driver window, so a parity regression in the long
 tail cannot hide until the next full parity sweep. Full-suite
 equivalence still comes from ``tools/parity.py``; this is the canary,
 not the census.
 
-The sample's seed is fixed (``DEFAULT_SEED``), not the calendar date:
-the seed is part of every test id, and a date seed renamed all 20
-tests at midnight, so two runs of the same tree on different days
-could not be compared test by test. Set ``PARITY_SAMPLE_SEED`` to draw
-another sample.
+- ``test_parity_sample[name@seed]`` checks a sample drawn from the fixed
+  ``PINNED_SEED``, so its test ids are the same on every day.
+- ``test_parity_sample_rotating[slot]`` checks a sample of the rest of
+  the tail drawn from today's date, so over the days it covers all of
+  it. Its ids are slot numbers, stable across days; a failure names the
+  query and the seed (``name@seed``) in its message.
 """
 
 from __future__ import annotations
 
+import datetime
 import os
 import random
 import sys
@@ -32,32 +34,31 @@ import __spark_entry__ as entry
 from parity import DRIVER_WINDOW, SF_DIR, TABLES, normalize
 
 SAMPLE_SIZE = 20
-DEFAULT_SEED = 20261019
+PINNED_SEED = 20261019
 
 
-def _seed() -> int:
-    """``DEFAULT_SEED`` unless ``PARITY_SAMPLE_SEED`` names another.
+def _draw(pool: list[str], seed: int) -> list[str]:
+    return sorted(random.Random(seed).sample(pool, min(SAMPLE_SIZE, len(pool))))
 
-    The parametrize ids embed the seed (``name@seed``), so copy the seed
-    from a failing test id into ``PARITY_SAMPLE_SEED=<seed> pytest ...``
-    to replay the exact same 20-query sample byte-for-byte.
+
+# the driver already hashes the first DRIVER_WINDOW entries every round;
+# sample the tail beyond its reach
+_ORACLES = entry.oracle_sql()
+TAIL = [n for n in list(entry.queries())[DRIVER_WINDOW:] if n in _ORACLES]
+PINNED = _draw(TAIL, PINNED_SEED)
+
+
+def _rotating_seed() -> int:
+    """Date-rotated by default; pin via PARITY_SAMPLE_SEED to reproduce.
+
+    A red canary must be re-runnable the next day: copy the seed from the
+    failure message (``name@seed``) into ``PARITY_SAMPLE_SEED=<seed>
+    pytest ...`` to replay the exact same 20-query sample byte-for-byte.
     """
     env = os.environ.get("PARITY_SAMPLE_SEED")
     if env:
         return int(env)
-    return DEFAULT_SEED
-
-
-def _sample_names() -> list[str]:
-    names = list(entry.queries())
-    oracles = entry.oracle_sql()
-    # the driver already hashes the first DRIVER_WINDOW entries every
-    # round; sample the tail beyond its reach
-    tail = [n for n in names[DRIVER_WINDOW:] if n in oracles]
-    seed = _seed()
-    picked = sorted(random.Random(seed).sample(tail, min(SAMPLE_SIZE, len(tail))))
-    # seed travels in the test id so a failure names its own repro
-    return [f"{n}@{seed}" for n in picked]
+    return int(datetime.date.today().strftime("%Y%m%d"))
 
 
 @pytest.fixture(scope="module")
@@ -69,13 +70,24 @@ def duck():
     con.close()
 
 
-@pytest.mark.parametrize("name", _sample_names())
-def test_parity_sample(spark, duck, name):
-    name = name.rsplit("@", 1)[0]
+def _check(spark, duck, name: str, tag: str) -> None:
     spdf = entry.queries()[name](spark, SF_DIR).toPandas()
-    odf = duck.execute(entry.oracle_sql()[name]).df()
+    odf = duck.execute(_ORACLES[name]).df()
     entry.release_persisted()
     a, b = normalize(spdf), normalize(odf)
-    assert list(a.columns) == list(b.columns)
-    assert len(a) == len(b)
-    pd.testing.assert_frame_equal(a, b, check_dtype=False, check_exact=True)
+    assert list(a.columns) == list(b.columns), tag
+    assert len(a) == len(b), tag
+    pd.testing.assert_frame_equal(a, b, check_dtype=False, check_exact=True, obj=tag)
+
+
+# the seed travels in the test id so a failure names its own repro
+@pytest.mark.parametrize("name", [f"{n}@{PINNED_SEED}" for n in PINNED])
+def test_parity_sample(spark, duck, name):
+    _check(spark, duck, name.rsplit("@", 1)[0], name)
+
+
+@pytest.mark.parametrize("slot", range(SAMPLE_SIZE))
+def test_parity_sample_rotating(spark, duck, slot):
+    seed = _rotating_seed()
+    name = _draw([n for n in TAIL if n not in PINNED], seed)[slot]
+    _check(spark, duck, name, f"{name}@{seed}")
