@@ -10915,6 +10915,63 @@ def entry(spark: SparkSession) -> DataFrame:
     return rag_answers(spark, "/root/testdata/sf0.001")
 
 
+#: The first-50 window: the ``queries()`` entries the correctness gate
+#: hashes, in order. Frozen: a new query may only replace another
+#: new query here, never push a checked one out (tests pin the order).
+DRIVER_WINDOW_QUERIES = (
+    "q1_pricing_summary",
+    "q3_shipping_priority",
+    "q5_region_revenue",
+    "q6_forecast_revenue",
+    "q14_promo_revenue",
+    "filter_pushdown_project",
+    "sketch_value_quantiles",
+    "kll_value_quantiles",
+    "video_iframe_stats",
+    "warc_documents",
+    "crawl_text_extraction",
+    "crawl_curation_pipeline",
+    "window_running_total",
+    "scalar_string_fns",
+    "join_semi",
+    "join_anti",
+    "rollup_agg",
+    "text_redact_pii",
+    "higher_order_fns",
+    "pivot_status_priority",
+    "explode_positions",
+    "events_dedup_first",
+    "user_latest_state",
+    "events_sessionization",
+    "asof_clicks_before_purchase",
+    "broadcast_join_agg",
+    "corpus_overlap_kmv",
+    "q10_returned_items",
+    "window_rank",
+    "orderby_limit",
+    "set_intersect",
+    "scalar_json_events",
+    "null_semantics",
+    "sql_surface",
+    "json_roundtrip",
+    "range_join_clicks",
+    "domain_heavy_hitters_mg",
+    "approx_distinct_counts",
+    "dataset_split_counts",
+    "vec_topk_broadcast",
+    "vec_cosine_topk",
+    "vec_topk_ivf",
+    "dedup_exact_groups",
+    "minhash_lsh_dups",
+    "span_dedup_cleaned_docs",
+    "simhash_near_dups",
+    "bm25_keyword_topk",
+    "hybrid_rrf_topk",
+    "rag_prompts",
+    "rag_answers",
+)
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # NOTE on ordering: the driver's correctness gate hashes exactly the
     # FIRST 50 entries (insertion order) against their oracles at sf0.01.

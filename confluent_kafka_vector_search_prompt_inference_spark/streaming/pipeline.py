@@ -342,9 +342,22 @@ def _backfill_positive(delta: DataFrame, store: str, eid: int, nparts: int) -> N
 _EXACT_PRUNE_MIN_BYTES = 4 << 30
 
 
+def _store_bytes(buckets_dir: str) -> int:
+    """On-disk bytes of a bucket store's committed dirs: what the
+    prune/gate crossover (:data:`_EXACT_PRUNE_MIN_BYTES`) and the gate
+    width (:func:`bloom_gate_auto_m_bits`) are sized from."""
+    return sum(_dir_bytes(d) for d in _committed_batch_dirs(buckets_dir))
+
+
+def _store_past_crossover(buckets_dir: str) -> bool:
+    """True once the store passes :data:`_EXACT_PRUNE_MIN_BYTES`: where
+    the dedup lanes' pruned read and bloom gate engage by default."""
+    return _store_bytes(buckets_dir) >= _EXACT_PRUNE_MIN_BYTES
+
+
 def bloom_gate_auto_m_bits(buckets_dir: str) -> int:
-    """Auto-sized width for :func:`dedup_insert`'s bloom gate, from the
-    bucket store's on-disk size: the narrow ``(key, bucket)`` store
+    """Auto-sized width for the dedup lanes' bloom gate (:class:`_BloomGate`),
+    from the bucket store's on-disk size: the narrow ``(key, bucket)`` store
     runs ~16 bytes/key, and ``m ≈ 16–32 bits/key`` keeps the gate's
     false-positive rate under ~0.5% at k=4 — a FIXED width would
     silently saturate as the store grows (measured: 2²² bits is
@@ -354,41 +367,50 @@ def bloom_gate_auto_m_bits(buckets_dir: str) -> int:
     rebuilds the bloom through the meta sidecar — an O(log n)-times
     amortized linear scan of the key column. Floor 2²⁰ (128 KB packed)
     so small stores don't thrash."""
-    byts = sum(_dir_bytes(d) for d in _committed_batch_dirs(buckets_dir))
-    est_keys = max(1, byts // 16)
+    est_keys = max(1, _store_bytes(buckets_dir) // 16)
     m = 1 << 20
     while m < 16 * est_keys:
         m <<= 1
     return m
 
 
-def _bloomgate_sync_meta(
-    bloom_dir: str, m_bits: int, k: int, checked: set
-) -> None:
+#: the gate bloom's hash count, pinned with its width in ``_bloom_meta.json``
+_BLOOM_K = 4
+
+
+def _bloom_pin(bloom_dir: str) -> dict | None:
+    """The gate dir's pinned ``{"m_bits", "k"}``, or None when nothing is
+    pinned or the pin cannot be read (a pin torn by a crash reads as a
+    mismatch: the dir resets and rebuilds, never wedges the lane)."""
+    import json
+
+    try:
+        with open(os.path.join(bloom_dir, "_bloom_meta.json")) as fh:
+            return json.load(fh)
+    except (OSError, ValueError):
+        return None
+
+
+def _bloomgate_sync_meta(bloom_dir: str, m_bits: int) -> None:
     """Pin a bloom-gate store's ``(m_bits, k)`` — the params are part of
     the bit positions themselves: deltas built under different params
     probe DIFFERENT bits, and merging them manufactures false negatives.
     On mismatch the whole dir resets and rebuilds from the sink (blooms
     are derived data) — the ``_ids`` schema-mismatch discipline, never a
-    heterogeneous merge. Shared by :func:`dedup_insert` (landed-keys
-    gate) and :func:`near_dedup_insert` (band-bucket-values gate)."""
+    heterogeneous merge. The pin lands through tmp + ``os.replace``, so a
+    crash never leaves a torn one."""
     import json
-    import shutil as _sh
+    import shutil
 
-    meta_path = os.path.join(bloom_dir, "_bloom_meta.json")
-    want = {"m_bits": m_bits, "k": k}
-    if os.path.isdir(bloom_dir):
-        have = None
-        if os.path.exists(meta_path):
-            with open(meta_path) as fh:
-                have = json.load(fh)
-        if have != want:
-            _sh.rmtree(bloom_dir, ignore_errors=True)
-            checked.clear()
+    want = {"m_bits": m_bits, "k": _BLOOM_K}
+    if _bloom_pin(bloom_dir) == want:
+        return
+    shutil.rmtree(bloom_dir, ignore_errors=True)
     os.makedirs(bloom_dir, exist_ok=True)
-    if not os.path.exists(meta_path):
-        with open(meta_path, "w") as fh:
-            json.dump(want, fh)
+    meta_path = os.path.join(bloom_dir, "_bloom_meta.json")
+    with open(meta_path + ".tmp", "w") as fh:
+        json.dump(want, fh)
+    os.replace(meta_path + ".tmp", meta_path)
 
 
 def _bloom_meta_m(bloom_dir: str) -> int | None:
@@ -406,13 +428,8 @@ def _bloom_meta_m(bloom_dir: str) -> int | None:
     (round-11 advice). Writing at the pinned width keeps every delta in
     a dir homogeneous by construction; the pin only moves through
     ``_bloomgate_sync_meta``'s reset-and-rebuild."""
-    import json
-
-    p = os.path.join(bloom_dir, "_bloom_meta.json")
-    if os.path.exists(p):
-        with open(p) as fh:
-            return int(json.load(fh)["m_bits"])
-    return None
+    pin = _bloom_pin(bloom_dir)
+    return int(pin["m_bits"]) if pin else None
 
 
 def _bloomgate_batch_reduced(
@@ -420,9 +437,7 @@ def _bloomgate_batch_reduced(
     bloom_dir: str,
     probes: DataFrame,
     key_col: str,
-    *,
     m_bits: int,
-    k: int,
 ) -> DataFrame:
     """The gate bloom, merged on read AND semi-reduced to the ≤
     ``|probes|·k`` packed words this batch will actually test — the
@@ -435,12 +450,207 @@ def _bloomgate_batch_reduced(
 
     from confluent_kafka_vector_search_prompt_inference_spark.operators.membership import bloom_needed_words
 
-    need = bloom_needed_words(probes, key_col, m_bits=m_bits, k=k)
+    need = bloom_needed_words(probes, key_col, m_bits=m_bits, k=_BLOOM_K)
     return (
         spark.read.parquet(*_committed_batch_dirs(bloom_dir))
         .join(F.broadcast(need), "word", "left_semi")
         .groupBy("word")
         .agg(F.bit_or("bits").alias("bits"))
+    )
+
+
+def _uncovered_epochs(sink_dir: str, store: str) -> list[tuple[int, str]]:
+    """``(epoch id, dir)`` of every committed sink epoch that ``store``
+    does not cover — neither a live ``_batch=`` dir nor a folded range.
+    These are the gaps a heal pass backfills: a crash between the rows
+    commit and the sidecar write, or a sink older than the store."""
+    covered = _covered_bucket_ranges(store)
+    out = []
+    for d in _committed_batch_dirs(sink_dir):
+        eid = int(d.rsplit("=", 1)[1])
+        if not _ranges_contain(covered, eid):
+            out.append((eid, d))
+    return out
+
+
+class _BloomGate:
+    """The landed-values bloom gate of the two dedup lanes: per-epoch
+    deltas under ``<sink>/_bloomgate`` (OR merge on read) over ``col`` —
+    :func:`dedup_insert`'s exact key, :func:`near_dedup_insert`'s
+    band-bucket values. ``values(spark, epoch_dir)`` gives a committed
+    sink epoch's rows holding ``col``.
+
+    A value the bloom rejects PROVABLY never landed. That needs the
+    bloom to be a SUPERSET of every committed epoch's values (a missed
+    one is a false negative: a duplicate landing), so a delta lands only
+    AFTER its epoch's rows commit (:meth:`land`), and :meth:`positive`
+    heals every uncovered epoch BEFORE it trusts the bloom. The width is
+    :func:`bloom_gate_auto_m_bits` of the current store, looked up at
+    each heal, and stays pinned through ``_bloom_meta.json``."""
+
+    def __init__(
+        self,
+        sink_dir: str,
+        col: str,
+        values: Callable[[SparkSession, str], DataFrame],
+    ):
+        self.sink_dir = sink_dir
+        self.dir = os.path.join(sink_dir, "_bloomgate")
+        self.col = col
+        self.values = values
+        self._write = idempotent_batch_writer(self.dir)
+
+    def _build(
+        self, spark: SparkSession, epoch_dir: str, eid: int, m_bits: int
+    ) -> None:
+        from confluent_kafka_vector_search_prompt_inference_spark.operators.membership import bloom_build
+
+        # duplicate values are free: bloom_build ORs bits
+        rows = self.values(spark, epoch_dir).select(self.col)
+        self._write(
+            bloom_build(rows, self.col, m_bits=m_bits, k=_BLOOM_K).coalesce(1), eid
+        )
+
+    def heal(self, spark: SparkSession) -> int:
+        """Pin the store's current auto width (a changed width resets the
+        dir) and backfill every committed epoch the bloom does not cover.
+        Returns the width."""
+        m_bits = bloom_gate_auto_m_bits(os.path.join(self.sink_dir, "_buckets"))
+        _bloomgate_sync_meta(self.dir, m_bits)
+        for eid, d in _uncovered_epochs(self.sink_dir, self.dir):
+            self._build(spark, d, eid, m_bits)
+        return m_bits
+
+    def positive(self, spark: SparkSession, probes: DataFrame) -> DataFrame:
+        """The rows of ``probes`` whose ``col`` value the healed bloom
+        holds: landed values plus the false-positive sliver."""
+        from pyspark.sql import functions as F
+
+        from confluent_kafka_vector_search_prompt_inference_spark.operators.membership import bloom_contains
+
+        m_bits = self.heal(spark)
+        bl = _bloomgate_batch_reduced(spark, self.dir, probes, self.col, m_bits)
+        return (
+            bloom_contains(bl, probes, self.col, m_bits=m_bits, k=_BLOOM_K)
+            .filter(F.col("bloom_member"))
+            .drop("bloom_member")
+        )
+
+    def land(
+        self, spark: SparkSession, epoch_dir: str, eid: int, compact_every: int
+    ) -> None:
+        """Land a committed epoch's delta at the dir's PINNED width
+        (:func:`_bloom_meta_m`; the auto width pins it only when nothing
+        is pinned yet), then fold the OR-idempotent deltas once they
+        outnumber the compaction cadence."""
+        m_bits = _bloom_meta_m(self.dir)
+        if m_bits is None:
+            m_bits = bloom_gate_auto_m_bits(os.path.join(self.sink_dir, "_buckets"))
+            _bloomgate_sync_meta(self.dir, m_bits)
+        self._build(spark, epoch_dir, eid, m_bits)
+        if len(_committed_batch_dirs(self.dir)) > compact_every:
+            compact_sink(spark, self.dir, keep_batches=1)
+
+
+def _heal_bucket_store(
+    spark: SparkSession,
+    sink_dir: str,
+    delta: Callable[[SparkSession, str], DataFrame],
+    n_parts: int,
+    nparts_sidecar: bool,
+) -> None:
+    """Backfill the ``(id, __bucket)`` delta of every committed sink epoch
+    the ``<sink>/_buckets`` store does not cover, from the epoch's own
+    rows (``delta(spark, epoch_dir)``). ``repartition(1)``, not bare
+    coalesce(1): a backfill may replay a LARGE pre-store epoch, and
+    coalesce alone would collapse the whole read pipeline into one task —
+    the shuffle keeps upstream parallelism while the flat write stays
+    single-file. During an online rebucket ``n_parts`` is the migration
+    target and each write records it (``nparts_sidecar``), same as the
+    live delta path."""
+    buckets_dir = os.path.join(sink_dir, "_buckets")
+    for eid, d in _uncovered_epochs(sink_dir, buckets_dir):
+        write_bucket_delta(
+            delta(spark, d).repartition(1), buckets_dir, eid,
+            num_partitions=n_parts, nparts_sidecar=nparts_sidecar,
+        )
+
+
+def _touched_parts(df: DataFrame, buckets_dir: str, bucket_partitions: int):
+    """``parts_for`` for :func:`read_bucket_store`: the ``__bpart``
+    partitions ``df``'s ``__bucket`` values touch, PER store N — one list
+    in steady state, one per N while an online rebucket leaves the store
+    mixed-N (pruning a target-N leg with meta-N parts would silently miss
+    candidates). None for an N whose every partition is touched."""
+    from pyspark.sql import functions as F
+
+    parts_by_n: dict[int, list[int] | None] = {}
+    for n in bucket_store_dir_ns(buckets_dir, bucket_partitions):
+        vals = [
+            r[0]
+            for r in df.select(F.pmod(F.col("__bucket"), F.lit(n)).cast("int"))
+            .distinct()
+            .collect()
+        ]
+        parts_by_n[n] = vals if len(vals) < n else None
+    return parts_by_n.get
+
+
+def _land_epoch_sidecars(
+    spark: SparkSession,
+    sink_dir: str,
+    epoch_id: int,
+    *,
+    delta: Callable[[SparkSession, str], DataFrame],
+    id_col: str,
+    ids_cols: list[str],
+    gate: _BloomGate,
+    gate_on: bool,
+    bloom_gate: bool | None,
+    bucket_partitions: int,
+    compact_every: int,
+    max_nudges: int = 1,
+) -> None:
+    """A dedup lane's writes after its epoch's rows commit: the epoch's
+    bucket-store delta, its ``_ids`` sidecar and its bloom-gate delta,
+    then the store's online maintenance (:func:`maintain_bucket_store`).
+
+    The three sidecar writes are mutually independent under the heal
+    contract — a missing store delta backfills through
+    :func:`_heal_bucket_store` and a missing bloom delta through
+    :meth:`_BloomGate.heal`, both BEFORE their consumers at the top of
+    the next batch, and a missing ids sidecar means readers project the
+    epoch dir — so they overlap (:func:`_parallel_postcommit`) instead of
+    paying three sequential driver-blocking jobs per batch. The bloom
+    delta lands when the gate ran this batch (``gate_on``), and also when
+    it did not but its dir exists and ``bloom_gate`` does not force it
+    off: the bloom must stay a superset of landed values for the batch
+    that engages it next. Rows first, then sidecars: a crash between the
+    two is exactly what the heals close; a committed replay skips every
+    write idempotently."""
+    target = os.path.join(sink_dir, f"_batch={epoch_id}")
+    if not os.path.exists(os.path.join(target, "_SUCCESS")):
+        return
+    buckets_dir = os.path.join(sink_dir, "_buckets")
+    n, sidecar = bucket_store_write_partitions(buckets_dir, bucket_partitions)
+    land_bloom = gate_on or (bloom_gate is None and os.path.isdir(gate.dir))
+    _parallel_postcommit(
+        lambda: write_bucket_delta(
+            delta(spark, target), buckets_dir, epoch_id,
+            num_partitions=n, nparts_sidecar=sidecar,
+        ),
+        lambda: write_ids_sidecar(spark, sink_dir, epoch_id, ids_cols),
+        (lambda: gate.land(spark, target, epoch_id, compact_every))
+        if land_bloom
+        else None,
+    )
+    # keep_batches=1 preserves idempotent replay of the newest epoch;
+    # absorbed ids live on in _folded_epochs.json range sidecars
+    maintain_bucket_store(
+        spark, sink_dir, id_col=id_col,
+        bucket_partitions=bucket_partitions,
+        compact_every=compact_every, keep_batches=1,
+        max_nudges_per_call=max_nudges,
     )
 
 
@@ -455,7 +665,6 @@ def dedup_insert(
     compact_every: int = 16,
     prune_store_read: bool | None = None,
     bloom_gate: bool | None = None,
-    bloom_m_bits: int | None = None,
     trigger_once: bool = False,
 ) -> StreamingQuery:
     """Continuous INSERT that drops rows whose content key already landed —
@@ -512,46 +721,32 @@ def dedup_insert(
     near-dedup lane applies via ``has_base``). ``True``/``False`` force
     either mode (the ladder's A/B).
 
-    ``bloom_gate`` (round 10): a bloom filter of every landed key
-    (``operators/membership.py``; per-epoch deltas under
-    ``<sink>/_bloomgate``, OR merge-on-read) pre-screens the batch —
-    keys the bloom rejects PROVABLY never landed, so they skip the
-    store entirely and only the bloom-positive sliver (true
+    ``bloom_gate`` (round 10): the dedup lanes' one bloom gate
+    (:class:`_BloomGate`), here over every landed key, pre-screens the
+    batch — keys the bloom rejects PROVABLY never landed, so they skip
+    the store entirely and only the bloom-positive sliver (true
     re-deliveries + the fp rate) drives the candidate read. On a
     new-key-heavy stream this shrinks the pruned read's touched
     partitions from ~|batch| dirs to ~fp·|batch| — the file-open cost
     the prune ladder measured as its own bottleneck. Correctness is
-    one-sided and crash-safe: the gate needs the bloom to be a SUPERSET
-    of landed keys, so deltas write AFTER the epoch's rows commit, the
-    heal pass backfills any committed epoch missing one before the
-    bloom is trusted (same coverage-sidecar machinery as the bucket
-    store; a pre-gate sink backfills once), and false positives only
-    cost the exact check they'd have done anyway. Retired keys stay in
-    the bloom (over-approximation) — their re-deliveries take the exact
-    path, where the tombstone re-verify lands them, which is what
-    retention means. ``bloom_m_bits=None`` (default) auto-sizes the
-    width from the store's measured bytes
-    (:func:`bloom_gate_auto_m_bits` — ~16–32 bits/key, <~0.5% fp at
-    k=4), resetting + rebuilding at each power-of-two doubling; a fixed
-    width saturates toward all-positive as the store grows (measured:
-    2²² is all-positive by 10M keys) — graceful, never incorrect, but
-    no gate. ``bloom_gate=None`` (default) follows the prune decision —
-    the regime where the win lives; ``True``/``False`` force (the
+    one-sided and crash-safe (deltas land after their epoch's rows,
+    gaps heal before the bloom is trusted, a pre-gate sink backfills
+    once), and false positives only cost the exact check they'd have
+    done anyway. Retired keys stay in the bloom (over-approximation) —
+    their re-deliveries take the exact path, where the tombstone
+    re-verify lands them, which is what retention means. The width is
+    :func:`bloom_gate_auto_m_bits` of the store's measured bytes
+    (~16–32 bits/key, <~0.5% fp at k=4), reset + rebuilt at each
+    power-of-two doubling; a fixed width would saturate toward
+    all-positive as the store grows (measured: 2²² is all-positive by
+    10M keys). ``bloom_gate=None`` (default) follows the prune decision
+    — the regime where the win lives; ``True``/``False`` force (the
     ladder's A/B)."""
     from pyspark.sql import functions as F
 
-    from confluent_kafka_vector_search_prompt_inference_spark.operators.membership import (
-        bloom_build,
-        bloom_contains,
-    )
-
     write_batch = idempotent_batch_writer(sink_dir)
     buckets_dir = os.path.join(sink_dir, "_buckets")
-    bloom_dir = os.path.join(sink_dir, "_bloomgate")
-    write_bloom = idempotent_batch_writer(bloom_dir)
-    layout_checked: set[int] = set()
-    bloom_checked: set[int] = set()
-    _BGK = 4  # bloom hash count; m/n = 10 at ~400k keys for ~1% fp
+    gate = _BloomGate(sink_dir, key_name, lambda spark, d: spark.read.parquet(d))
 
     def _epoch_delta(spark: SparkSession, epoch_dir: str) -> DataFrame:
         rows = spark.read.parquet(epoch_dir)
@@ -565,55 +760,6 @@ def dedup_insert(
             key_name, F.xxhash64(key_name).alias("__bucket")
         ).dropDuplicates([key_name])
 
-    def _heal_store(spark: SparkSession, n_parts: int, sidecar: bool) -> None:
-        covered = _covered_bucket_ranges(buckets_dir)
-        for d in _committed_batch_dirs(sink_dir):
-            eid = int(d.rsplit("=", 1)[1])
-            if eid in layout_checked or _ranges_contain(covered, eid):
-                layout_checked.add(eid)
-                continue
-            write_bucket_delta(
-                _epoch_delta(spark, d).repartition(1), buckets_dir, eid,
-                num_partitions=n_parts, nparts_sidecar=sidecar,
-            )
-            layout_checked.add(eid)
-
-    def _bloom_m() -> int:
-        return (
-            bloom_m_bits
-            if bloom_m_bits is not None
-            else bloom_gate_auto_m_bits(buckets_dir)
-        )
-
-    def _heal_bloom(spark: SparkSession, m_bits: int) -> None:
-        # the gate is only sound if the bloom covers EVERY committed
-        # epoch (a missed key would be a false negative = a duplicate
-        # landing). Same coverage discipline as the bucket store: live
-        # _batch= dirs plus folded-sidecar ranges; gaps (a crash between
-        # the rows commit and the bloom write, or a pre-gate sink)
-        # backfill from the epoch's own key column, once.
-        #
-        # (m_bits, k) pinning + reset-on-mismatch: _bloomgate_sync_meta
-        _bloomgate_sync_meta(bloom_dir, m_bits, _BGK, bloom_checked)
-        covered = _covered_bucket_ranges(bloom_dir)
-        for d in _committed_batch_dirs(sink_dir):
-            eid = int(d.rsplit("=", 1)[1])
-            if eid in bloom_checked or _ranges_contain(covered, eid):
-                bloom_checked.add(eid)
-                continue
-            write_bloom(
-                bloom_build(
-                    spark.read.parquet(d)
-                    .select(key_name)
-                    .dropDuplicates([key_name]),
-                    key_name,
-                    m_bits=m_bits,
-                    k=_BGK,
-                ).coalesce(1),
-                eid,
-            )
-            bloom_checked.add(eid)
-
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
         keyed = batch_df.withColumn(key_name, key_expr)
@@ -621,64 +767,31 @@ def dedup_insert(
         # An empty sink (first batch) has no committed _batch=* dirs; any
         # other failure must propagate so the checkpoint retries the batch —
         # swallowing it would silently disable dedup and commit duplicates.
-        inc = None
-        gate_inc = None
-        m_used: int | None = None
+        gate_on = bool(bloom_gate)
+        persisted: list[DataFrame] = []
         if _sink_has_batches(sink_dir):
-            write_n, write_sc = bucket_store_write_partitions(
-                buckets_dir, bucket_partitions
+            _heal_bucket_store(
+                spark, sink_dir, _epoch_delta,
+                *bucket_store_write_partitions(buckets_dir, bucket_partitions),
             )
-            _heal_store(spark, write_n, write_sc)
             inc = keyed.select(
                 key_name, F.xxhash64(key_name).alias("__bucket")
             ).persist()
+            persisted.append(inc)
             prune = prune_store_read
             if prune is None:
-                prune = (
-                    sum(
-                        _dir_bytes(d)
-                        for d in _committed_batch_dirs(buckets_dir)
-                    )
-                    >= _EXACT_PRUNE_MIN_BYTES
-                )
-            gate = bloom_gate if bloom_gate is not None else prune
-            gate_inc = inc
-            if gate:
+                prune = _store_past_crossover(buckets_dir)
+            gate_on = bloom_gate if bloom_gate is not None else prune
+            if gate_on:
                 # pre-screen against the landed-keys bloom: rejected
                 # keys PROVABLY never landed and drop out of the
                 # candidate derivation entirely; only the positive
                 # sliver (re-deliveries + fp) touches the store below
-                m_used = _bloom_m()
-                _heal_bloom(spark, m_used)
-                bl = _bloomgate_batch_reduced(
-                    spark, bloom_dir, inc, key_name, m_bits=m_used, k=_BGK
-                )
-                gate_inc = (
-                    bloom_contains(
-                        bl, inc, key_name, m_bits=m_used, k=_BGK
-                    )
-                    .filter(F.col("bloom_member"))
-                    .select(key_name, "__bucket")
-                    .persist()
-                )
+                inc = gate.positive(spark, inc).persist()
+                persisted.append(inc)
             parts_for = None
-            if prune and _split_bucket_dirs(
-                _committed_batch_dirs(buckets_dir)
-            )[0]:
-                # touched partitions PER store N (one list in steady
-                # state; one per N while an online rebucket is pending)
-                parts_by_n: dict[int, list[int] | None] = {}
-                for n in bucket_store_dir_ns(buckets_dir, bucket_partitions):
-                    vals = [
-                        r[0]
-                        for r in gate_inc.select(
-                            F.pmod(F.col("__bucket"), F.lit(n)).cast("int")
-                        )
-                        .distinct()
-                        .collect()
-                    ]
-                    parts_by_n[n] = vals if len(vals) < n else None
-                parts_for = lambda n: parts_by_n.get(n)  # noqa: E731
+            if prune and _split_bucket_dirs(_committed_batch_dirs(buckets_dir))[0]:
+                parts_for = _touched_parts(inc, buckets_dir, bucket_partitions)
             old = read_bucket_store(
                 spark, buckets_dir, key_name, parts_for=parts_for
             )
@@ -686,7 +799,7 @@ def dedup_insert(
             # the (gated) batch (collisions only WIDEN the set) —
             # batch-sized, so the anti-join's right side broadcasts
             seen = old.join(
-                F.broadcast(gate_inc.select("__bucket").distinct()),
+                F.broadcast(inc.select("__bucket").distinct()),
                 "__bucket",
                 "left_semi",
             ).select(key_name).distinct()
@@ -716,74 +829,15 @@ def dedup_insert(
             keyed = keyed.join(F.broadcast(seen), key_name, "left_anti")
         try:
             write_batch(keyed, epoch_id)
-            target = os.path.join(sink_dir, f"_batch={epoch_id}")
-            if os.path.exists(os.path.join(target, "_SUCCESS")):
-                # the three epoch-keyed sidecar writes are mutually
-                # independent under the heal contract (delta backfills
-                # via _heal_store, bloom via _heal_bloom, the ids sidecar
-                # falls back to the epoch dir) — overlap them
-                # (_parallel_postcommit) instead of paying three
-                # sequential driver-blocking jobs per micro-batch
-                wn, wsc = bucket_store_write_partitions(
-                    buckets_dir, bucket_partitions
-                )
-
-                def _w_delta() -> None:
-                    write_bucket_delta(
-                        _epoch_delta(spark, target), buckets_dir, epoch_id,
-                        num_partitions=wn, nparts_sidecar=wsc,
-                    )
-                    layout_checked.add(epoch_id)
-
-                def _w_ids() -> None:
-                    write_ids_sidecar(spark, sink_dir, epoch_id, [key_name])
-
-                _w_bloom = None
-                if bloom_gate or (bloom_gate is None and os.path.isdir(bloom_dir)):
-                    # keep the bloom a superset of landed keys: the
-                    # epoch's delta lands right after its rows (a crash
-                    # between the two is exactly what _heal_bloom
-                    # closes); fold the OR-idempotent deltas once they
-                    # outnumber the compaction cadence. Width comes from
-                    # the dir's PIN when the gate didn't run this batch
-                    # (_bloom_meta_m: a fresh auto recompute can diverge
-                    # from the pin across a shrink/regrow — foreign-width
-                    # deltas probe wrong words = false negatives)
-                    def _w_bloom() -> None:
-                        m_delta = m_used
-                        if m_delta is None:
-                            m_delta = _bloom_meta_m(bloom_dir)
-                        if m_delta is None:
-                            m_delta = _bloom_m()
-                            _bloomgate_sync_meta(
-                                bloom_dir, m_delta, _BGK, bloom_checked
-                            )
-                        write_bloom(
-                            bloom_build(
-                                spark.read.parquet(target)
-                                .select(key_name)
-                                .dropDuplicates([key_name]),
-                                key_name,
-                                m_bits=m_delta,
-                                k=_BGK,
-                            ).coalesce(1),
-                            epoch_id,
-                        )
-                        bloom_checked.add(epoch_id)
-                        if len(_committed_batch_dirs(bloom_dir)) > compact_every:
-                            compact_sink(spark, bloom_dir, keep_batches=1)
-
-                _parallel_postcommit(_w_delta, _w_ids, _w_bloom)
-                maintain_bucket_store(
-                    spark, sink_dir, id_col=key_name,
-                    bucket_partitions=bucket_partitions,
-                    compact_every=compact_every, keep_batches=1,
-                )
+            _land_epoch_sidecars(
+                spark, sink_dir, epoch_id, delta=_epoch_delta,
+                id_col=key_name, ids_cols=[key_name], gate=gate,
+                gate_on=gate_on, bloom_gate=bloom_gate,
+                bucket_partitions=bucket_partitions, compact_every=compact_every,
+            )
         finally:
-            if inc is not None:
-                inc.unpersist()
-            if gate_inc is not None and gate_inc is not inc:
-                gate_inc.unpersist()
+            for df in reversed(persisted):
+                df.unpersist()
 
     return _start_stream(stream_df, process, checkpoint_dir, trigger_once)
 
@@ -2440,7 +2494,6 @@ def near_dedup_insert(
     exact_key_col: str | None = None,
     maintenance_nudges: int = 1,
     bloom_gate: bool | None = None,
-    bloom_m_bits: int | None = None,
 ) -> StreamingQuery:
     """Continuous INSERT that drops NEAR-duplicate documents — the
     streaming leg of the MinHash-LSH dedup family (the exact-key version
@@ -2540,35 +2593,31 @@ def near_dedup_insert(
       (max_nudges_per_call=...)`` — the batch-latency ↔ migration-drain
       trade for slow trigger cadences.
 
-    ``bloom_gate`` (round 11 — the exact-dedup gate's machinery applied
-    to this lane, SCALING.md's round-10 residual): a bloom filter over
-    the store's BAND-BUCKET VALUES (per-epoch deltas under
-    ``<sink>/_bloomgate``, OR merge-on-read) pre-screens the incoming
-    batch's bucket hashes — a bucket the bloom rejects PROVABLY holds no
-    landed row, so a novel doc whose 16 band buckets are all
-    bloom-negative drives NO candidate read at all, and the pruned
-    store read's touched-partition count falls from ~|batch|·bands dirs
-    to ~(true bucket collisions + fp)·dirs — the per-request object-
-    store economics the exact-dedup ladder measured as the gate's
-    lever. Exactness is unconditional: the gated rows are exactly
-    those the ``old ⋈ inc`` bucket equi-join could never match, so the
-    candidate-pair set is IDENTICAL with the gate on or off
+    ``bloom_gate`` (round 11, SCALING.md's round-10 residual): the dedup
+    lanes' one bloom gate (:class:`_BloomGate`, shared with
+    :func:`dedup_insert`), here over the store's BAND-BUCKET VALUES,
+    pre-screens the incoming batch's bucket hashes — a bucket the bloom
+    rejects PROVABLY holds no landed row, so a novel doc whose 16 band
+    buckets are all bloom-negative drives NO candidate read at all, and
+    the pruned store read's touched-partition count falls from
+    ~|batch|·bands dirs to ~(true bucket collisions + fp)·dirs — the
+    per-request object-store economics the exact-dedup ladder measured
+    as the gate's lever. Exactness is unconditional: the gated rows are
+    exactly those the ``old ⋈ inc`` bucket equi-join could never match,
+    so the candidate-pair set is IDENTICAL with the gate on or off
     (pytest-pinned, including across retention tombstones and an
     online rebucket — bucket VALUES survive both; folds and rebuckets
     change layout, never values, and a pruned tombstone only removes
-    rows, keeping the bloom a superset). Crash contract, shared with
-    :func:`dedup_insert`'s gate: deltas land AFTER the epoch's rows
-    commit, gaps backfill from landed signatures before the bloom is
-    trusted, and ``(m_bits, k)`` are pinned in a meta sidecar (mismatch
-    = reset + rebuild — derived data). ``bloom_m_bits=None`` auto-sizes
-    from the store's measured bytes (:func:`bloom_gate_auto_m_bits`);
-    ``bloom_gate=None`` (default) engages once a compacted base exists
-    AND the store passes the measured prune-crossover size
-    (:data:`_EXACT_PRUNE_MIN_BYTES` — the exact-dedup ladder's honest
-    negative: the gate's win is request-priced object-store dir opens,
-    unmeasurable on warm local disk, so small stores never pay the
-    per-batch bloom upkeep); ``True``/``False`` force (the ladder's
-    A/B)."""
+    rows, keeping the bloom a superset). The crash contract and the
+    width (:func:`bloom_gate_auto_m_bits` of the store's measured
+    bytes, pinned in a meta sidecar) are the gate's; here gaps backfill
+    from landed signatures. ``bloom_gate=None`` (default) engages once
+    a compacted base exists AND the store passes the measured
+    prune-crossover size (:data:`_EXACT_PRUNE_MIN_BYTES` — the
+    exact-dedup ladder's honest negative: the gate's win is
+    request-priced object-store dir opens, unmeasurable on warm local
+    disk, so small stores never pay the per-batch bloom upkeep);
+    ``True``/``False`` force (the ladder's A/B)."""
     from pyspark.sql import functions as F
 
     from confluent_kafka_vector_search_prompt_inference_spark.operators.dedup import (
@@ -2583,10 +2632,6 @@ def near_dedup_insert(
         return band_buckets(sig_col, num_hashes=num_hashes, bands=bands)
 
     buckets_dir = os.path.join(sink_dir, "_buckets")
-    bloomgate_dir = os.path.join(sink_dir, "_bloomgate")
-    write_bloomgate = idempotent_batch_writer(bloomgate_dir)
-    bloomgate_checked: set[int] = set()
-    _BGK = 4  # bloom hash count (shared auto-sizer keeps fp < ~0.5%)
     # epochs whose on-disk layout this process has already vetted (or
     # itself wrote) — bounds the heal pass's pre-upgrade footer check to
     # one read per epoch per stream lifetime, not one per micro-batch
@@ -2596,15 +2641,6 @@ def near_dedup_insert(
     # by this very writer
     sink_contract_ok = False
 
-    def _committed_epoch_ids(d: str) -> dict[int, str]:
-        import glob
-
-        out = {}
-        for p in glob.glob(os.path.join(d, "_batch=*")):
-            if os.path.exists(os.path.join(p, "_SUCCESS")):
-                out[int(p.rsplit("=", 1)[1])] = p
-        return out
-
     def _epoch_delta(spark: SparkSession, sink_epoch_dir: str) -> DataFrame:
         rows = spark.read.parquet(sink_epoch_dir)
         return rows.select(
@@ -2612,24 +2648,24 @@ def near_dedup_insert(
             F.explode(_band_buckets(F.col("__minhash"))).alias("__bucket"),
         )
 
-    def _heal_bucket_store(
-        spark: SparkSession, n_parts: int, nparts_sidecar: bool = False
+    gate = _BloomGate(sink_dir, "__bucket", _epoch_delta)
+
+    def _upgrade_flat_deltas(
+        spark: SparkSession, n_parts: int, nparts_sidecar: bool
     ) -> None:
-        """Self-heal: backfill any committed sink epoch the store doesn't
-        cover (pre-upgrade sink, crash between the two epoch writes) from
-        its landed signatures. Pre-round-7 deltas — flat files WITHOUT
-        the ``__bpart`` column — are rewritten in place once (same flat
-        layout plus the column the pruned read filters on); deltas that
-        already carry it are the native live format and read as-is, so
-        the steady-state heal pass does no Spark work at all. During an
-        online rebucket, ``n_parts`` is the migration TARGET and every
-        heal write records it in the per-dir ``_nparts.json`` sidecar
-        (``nparts_sidecar``), same as the live delta path."""
+        """Pre-round-7 deltas — flat files WITHOUT the ``__bpart``
+        column — are rewritten in place once (same flat layout plus the
+        column the pruned read filters on); deltas that already carry it
+        are the native live format and read as-is, so the steady-state
+        pass does no Spark work at all. During an online rebucket,
+        ``n_parts`` is the migration TARGET and each rewrite records it
+        in the per-dir ``_nparts.json`` sidecar (``nparts_sidecar``),
+        same as the live delta path."""
         import json
         import shutil
 
-        covered = _covered_bucket_ranges(buckets_dir)
-        for eid, p in _committed_epoch_ids(buckets_dir).items():
+        for p in _committed_batch_dirs(buckets_dir):
+            eid = int(p.rsplit("=", 1)[1])
             if eid in layout_checked:
                 continue  # this process already vetted (or wrote) it
             if _split_bucket_dirs([p])[0]:
@@ -2656,58 +2692,6 @@ def near_dedup_insert(
                     json.dump({"num_partitions": int(n_parts)}, fh)
             shutil.rmtree(p)
             os.rename(mig, p)
-        for eid, p in _committed_epoch_ids(sink_dir).items():
-            if _ranges_contain(covered, eid):
-                continue
-            # repartition(1), not bare coalesce(1): the backfill may
-            # replay a LARGE pre-upgrade epoch, and coalesce alone would
-            # collapse the whole read+explode pipeline into one task —
-            # the shuffle boundary keeps upstream parallelism while the
-            # flat write stays single-file (write_bucket_delta's
-            # coalesce(1) is then a no-op on the 1-partition shuffle
-            # output). Live micro-batch deltas skip the shuffle: their
-            # writes go through write_bucket_delta directly.
-            write_bucket_delta(
-                _epoch_delta(spark, p).repartition(1), buckets_dir, eid,
-                num_partitions=n_parts, nparts_sidecar=nparts_sidecar,
-            )
-            layout_checked.add(eid)
-
-    def _bloom_m() -> int:
-        return (
-            bloom_m_bits
-            if bloom_m_bits is not None
-            else bloom_gate_auto_m_bits(buckets_dir)
-        )
-
-    def _heal_bucket_bloom(spark: SparkSession, m_bits: int) -> None:
-        # the gate is sound only if the bloom covers the bucket VALUES of
-        # EVERY committed epoch (a missed value would be a false negative
-        # = a near-dup landing). Coverage discipline shared with the
-        # bucket store: live _batch= dirs plus folded-sidecar ranges;
-        # gaps (a crash between the rows commit and the bloom write, a
-        # pre-gate sink) backfill from the epoch's landed signatures.
-        from confluent_kafka_vector_search_prompt_inference_spark.operators.membership import bloom_build
-
-        _bloomgate_sync_meta(bloomgate_dir, m_bits, _BGK, bloomgate_checked)
-        covered = _covered_bucket_ranges(bloomgate_dir)
-        for d in _committed_batch_dirs(sink_dir):
-            eid = int(d.rsplit("=", 1)[1])
-            if eid in bloomgate_checked or _ranges_contain(covered, eid):
-                bloomgate_checked.add(eid)
-                continue
-            write_bloomgate(
-                bloom_build(
-                    _epoch_delta(spark, d)
-                    .select("__bucket")
-                    .dropDuplicates(["__bucket"]),
-                    "__bucket",
-                    m_bits=m_bits,
-                    k=_BGK,
-                ).coalesce(1),
-                eid,
-            )
-            bloomgate_checked.add(eid)
 
     sidecar_cols = [id_col] + (
         [exact_key_col] if exact_key_col and exact_key_col != id_col else []
@@ -2764,9 +2748,7 @@ def near_dedup_insert(
         ).select(F.col("id_b").alias(id_col)).distinct()
         keyed = keyed.join(dups, id_col, "left_anti")
         # (3) vs already-landed rows: bucket join on band hashes, exact verify
-        pairs = None
-        gate = bool(bloom_gate)  # resolved against store age below
-        m_used: int | None = None
+        gate_on = bool(bloom_gate)  # resolved against store age below
         persisted: list[DataFrame] = [sh, sigs]
         if _sink_has_batches(sink_dir):
             # contract check from ONE footer (not a mergeSchema sweep of
@@ -2789,7 +2771,8 @@ def near_dedup_insert(
             write_n, write_sc = bucket_store_write_partitions(
                 buckets_dir, bucket_partitions
             )
-            _heal_bucket_store(spark, write_n, write_sc)
+            _upgrade_flat_deltas(spark, write_n, write_sc)
+            _heal_bucket_store(spark, sink_dir, _epoch_delta, write_n, write_sc)
             # the bucket join moves (id, bucket) ONLY — document bodies
             # re-attach to the few candidate pairs by id afterwards. The
             # landed side is the one input that GROWS for the stream's
@@ -2817,68 +2800,29 @@ def near_dedup_insert(
                 # (object-store dir opens), unmeasurable-to-negative on
                 # warm local disk, so small stores never pay the
                 # per-batch bloom upkeep
-                gate = has_base and (
-                    sum(
-                        _dir_bytes(d)
-                        for d in _committed_batch_dirs(buckets_dir)
-                    )
-                    >= _EXACT_PRUNE_MIN_BYTES
-                )
-            else:
-                gate = bloom_gate
-            if has_base or gate:
+                gate_on = has_base and _store_past_crossover(buckets_dir)
+            if has_base or gate_on:
                 inc = inc.persist()
                 persisted.append(inc)
-            ginc = inc
-            if gate:
+            if gate_on:
                 # bloom over the store's bucket VALUES: rejected buckets
                 # PROVABLY hold no landed row, so they drop out of the
                 # candidate derivation — the equi-join below could never
                 # have matched them, so the pair set is unchanged while
                 # the parts probe + pruned read see only the positive
                 # sliver (true collisions + fp)
-                from confluent_kafka_vector_search_prompt_inference_spark.operators.membership import bloom_contains
-
-                m_used = _bloom_m()
-                _heal_bucket_bloom(spark, m_used)
-                bvals = inc.select("__bucket").distinct()
-                bl = _bloomgate_batch_reduced(
-                    spark, bloomgate_dir, bvals, "__bucket",
-                    m_bits=m_used, k=_BGK,
-                )
-                pos = (
-                    bloom_contains(bl, bvals, "__bucket", m_bits=m_used, k=_BGK)
-                    .filter(F.col("bloom_member"))
-                    .select("__bucket")
-                )
-                ginc = inc.join(F.broadcast(pos), "__bucket", "left_semi").persist()
-                persisted.append(ginc)
-            if has_base:
-                # touched partitions PER store N: one list in steady
-                # state, one per N while an online rebucket leaves the
-                # store mixed-N (pruning a target-N leg with meta-N
-                # parts would silently miss candidates)
-                parts_by_n: dict[int, list[int] | None] = {}
-                for n in bucket_store_dir_ns(buckets_dir, bucket_partitions):
-                    vals = [
-                        r[0]
-                        for r in ginc.select(
-                            F.pmod(F.col("__bucket"), F.lit(n)).cast("int")
-                        )
-                        .distinct()
-                        .collect()
-                    ]
-                    parts_by_n[n] = vals if len(vals) < n else None
-                old = read_bucket_store(
-                    spark, buckets_dir, id_col,
-                    parts_for=lambda n: parts_by_n.get(n),
-                ).select(F.col(id_col).alias("id_a"), "__bucket")
-            else:
-                old = read_bucket_store(spark, buckets_dir, id_col).select(
-                    F.col(id_col).alias("id_a"), "__bucket"
-                )
+                inc = gate.positive(spark, inc).persist()
+                persisted.append(inc)
+            old = read_bucket_store(
+                spark, buckets_dir, id_col,
+                parts_for=(
+                    _touched_parts(inc, buckets_dir, bucket_partitions)
+                    if has_base
+                    else None
+                ),
+            ).select(F.col(id_col).alias("id_a"), "__bucket")
             pairs = (
-                old.join(F.broadcast(ginc.select("id_b", "__bucket")), "__bucket")
+                old.join(F.broadcast(inc.select("id_b", "__bucket")), "__bucket")
                 .select("id_a", "id_b")
                 .dropDuplicates(["id_a", "id_b"])
                 .persist()
@@ -2922,94 +2866,21 @@ def near_dedup_insert(
                 keyed = keyed.join(hits, id_col, "left_anti")
         try:
             write_batch(keyed, epoch_id)
-            # this epoch's bucket delta: computed from the just-committed
+            # this epoch's bucket delta is computed from the just-committed
             # epoch dir (a survivors-sized disk read, NOT a re-run of the
-            # dedup joins, and NOT a second full two-tree glob). Written
-            # second, so a crash between the two writes is healed by
-            # _heal_bucket_store on the next batch; a committed replay
-            # skips both idempotently.
-            target = os.path.join(sink_dir, f"_batch={epoch_id}")
-            if os.path.exists(os.path.join(target, "_SUCCESS")):
-                # the three epoch-keyed sidecar writes are mutually
-                # independent under the heal contract (delta backfills
-                # via _heal_bucket_store, the gate bloom via
-                # _heal_bucket_bloom — both run BEFORE their consumers at
-                # the top of the next batch — and a missing ids sidecar
-                # just means readers fall back to projecting the epoch
-                # dir): overlap them (_parallel_postcommit) instead of
-                # paying three sequential driver-blocking jobs per batch
-                wn, wsc = bucket_store_write_partitions(
-                    buckets_dir, bucket_partitions
-                )
-
-                def _w_delta() -> None:
-                    write_bucket_delta(
-                        _epoch_delta(spark, target), buckets_dir, epoch_id,
-                        num_partitions=wn, nparts_sidecar=wsc,
-                    )
-                    layout_checked.add(epoch_id)
-
-                def _w_ids() -> None:
-                    write_ids_sidecar(spark, sink_dir, epoch_id, sidecar_cols)
-
-                _w_bloom = None
-                if gate or (bloom_gate is None and os.path.isdir(bloomgate_dir)):
-                    # keep the gate bloom a superset of landed bucket
-                    # values: the epoch's delta lands right after its
-                    # rows (a crash between is exactly what
-                    # _heal_bucket_bloom closes); OR-idempotent deltas
-                    # fold once they outnumber the compaction cadence.
-                    # Width comes from the dir's PIN when the gate
-                    # didn't run this batch (_bloom_meta_m: a fresh
-                    # auto recompute can diverge from the pin across a
-                    # shrink/regrow — foreign-width deltas probe wrong
-                    # words = false negatives)
-                    from confluent_kafka_vector_search_prompt_inference_spark.operators.membership import bloom_build
-
-                    def _w_bloom() -> None:
-                        m_delta = m_used
-                        if m_delta is None:
-                            m_delta = _bloom_meta_m(bloomgate_dir)
-                        if m_delta is None:
-                            m_delta = _bloom_m()
-                            _bloomgate_sync_meta(
-                                bloomgate_dir, m_delta, _BGK, bloomgate_checked
-                            )
-                        write_bloomgate(
-                            bloom_build(
-                                _epoch_delta(spark, target)
-                                .select("__bucket")
-                                .dropDuplicates(["__bucket"]),
-                                "__bucket",
-                                m_bits=m_delta,
-                                k=_BGK,
-                            ).coalesce(1),
-                            epoch_id,
-                        )
-                        bloomgate_checked.add(epoch_id)
-                        if len(_committed_batch_dirs(bloomgate_dir)) > compact_every:
-                            compact_sink(spark, bloomgate_dir, keep_batches=1)
-
-                _parallel_postcommit(_w_delta, _w_ids, _w_bloom)
-            # bounded directory count AND the partitioned layout's home:
-            # once the flat tail exceeds compact_every epochs it folds
-            # into a NEW __bpart-partitioned run, and runs merge
-            # geometrically — the prior base is NOT refolded every
-            # trigger, so the amortized per-batch write is O(log
-            # history), not O(history/compact_every). Round 9: the folds
-            # also carry the store's pending maintenance (retirement
-            # tombstones from enforce_retention_tombstoned, an online
-            # rebucket from request_rebucket_online), so the
-            # forever-running pipeline never stops for a store rewrite —
-            # see maintain_bucket_store. keep_batches=1 preserves
-            # idempotent replay of the newest epoch; absorbed ids live
-            # on in _folded_epochs.json range sidecars.
-            maintain_bucket_store(
-                spark, sink_dir, id_col=id_col,
-                bucket_partitions=bucket_partitions,
-                compact_every=compact_every, keep_batches=1,
-                max_nudges_per_call=maintenance_nudges,
+            # dedup joins). Round 9: the maintenance after it also carries
+            # the store's pending maintenance (retirement tombstones from
+            # enforce_retention_tombstoned, an online rebucket from
+            # request_rebucket_online) on the geometric folds, so the
+            # forever-running pipeline never stops for a store rewrite
+            _land_epoch_sidecars(
+                spark, sink_dir, epoch_id, delta=_epoch_delta,
+                id_col=id_col, ids_cols=sidecar_cols, gate=gate,
+                gate_on=gate_on, bloom_gate=bloom_gate,
+                bucket_partitions=bucket_partitions, compact_every=compact_every,
+                max_nudges=maintenance_nudges,
             )
+            layout_checked.add(epoch_id)
         finally:
             for df in reversed(persisted):
                 df.unpersist()
@@ -4682,13 +4553,14 @@ def agg_insert(
     integer units (cents/nanos — the repo-wide exactness convention);
     a DOUBLE sum's partial-merge order is batch-layout-dependent.
 
-    The sink records its ``group_cols`` and merge plan. Once a partial
-    has committed, a start asking for another plan raises ``ValueError``
-    before the stream starts; until then each start re-records its own
-    plan, so a start that failed (say, on a non-decomposable spec, which
-    fails inside the first batch) can be retried with a corrected one.
-    The plan holds merge functions only: ``count`` and ``sum(col)`` both
-    merge by ``sum``, so swapping one for the other is not detected."""
+    The sink records its ``group_cols``, merge plan and batch-level
+    ``agg_exprs`` (``count`` and ``sum(col)`` both merge by ``sum``, so
+    only the specs tell them apart). Once a partial has committed, a
+    start asking for another plan raises ``ValueError`` before the
+    stream starts; until then each start re-records its own plan, so a
+    start that failed (say, on a non-decomposable spec, which fails
+    inside the first batch) can be retried with a corrected one. A plan
+    recorded without specs is checked on its group and merge columns."""
     import json
 
     from pyspark.sql import functions as F
@@ -4728,7 +4600,9 @@ def agg_insert(
     # never a torn one). A sink with committed partials keeps the plan
     # they were built with: folding them by another one reads back wrong
     # values. A plan no partial was built with is simply replaced
-    plan = {"group_cols": list(group_cols), "merge": merge_plan}
+    plan = {
+        "group_cols": list(group_cols), "merge": merge_plan, "specs": dict(agg_exprs)
+    }
     plan_p = os.path.join(sink_dir, "_merge_plan.json")
     recorded = None
     if _committed_batch_dirs(sink_dir) and os.path.exists(plan_p):
@@ -4739,7 +4613,7 @@ def agg_insert(
         with open(plan_p + ".tmp", "w") as fh:
             json.dump(plan, fh)
         os.replace(plan_p + ".tmp", plan_p)
-    elif recorded != plan:
+    elif {k: plan.get(k) for k in recorded} != recorded:
         raise ValueError(
             f"agg_insert: sink {sink_dir} holds partials of merge plan "
             f"{recorded}, but this start asks for {plan}; use a new sink"

@@ -91,3 +91,10 @@ def test_parity_sample_rotating(spark, duck, slot):
     seed = _rotating_seed()
     name = _draw([n for n in TAIL if n not in PINNED], seed)[slot]
     _check(spark, duck, name, f"{name}@{seed}")
+
+
+def test_driver_window_is_frozen():
+    """The correctness gate hashes the first 50 ``queries()`` entries; the
+    window only changes by editing ``DRIVER_WINDOW_QUERIES`` on purpose."""
+    assert len(entry.DRIVER_WINDOW_QUERIES) == DRIVER_WINDOW
+    assert list(entry.queries())[:DRIVER_WINDOW] == list(entry.DRIVER_WINDOW_QUERIES)

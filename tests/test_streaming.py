@@ -1036,7 +1036,9 @@ def test_agg_insert_writes_merge_plan_before_start(tmp_path):
             group_cols=["event_type"], agg_exprs={"n": "count"},
         )
     with open(os.path.join(sink, "_merge_plan.json")) as fh:
-        assert json.load(fh) == {"group_cols": ["event_type"], "merge": {"n": "sum"}}
+        assert json.load(fh) == {
+            "group_cols": ["event_type"], "merge": {"n": "sum"}, "specs": {"n": "count"}
+        }
     assert os.listdir(sink) == ["_merge_plan.json"]
 
 
@@ -1056,6 +1058,49 @@ def test_agg_insert_refuses_another_merge_plan(spark, tmp_path, events_dir):
     with pytest.raises(ValueError, match="group_cols"):
         agg_insert(stream, sink, ckpt, group_cols=["user_id"],
                    agg_exprs={"n": "count"}, trigger_once=True)
+    assert sum(r.n for r in read_agg(spark, sink).collect()) == n
+
+
+def test_agg_insert_refuses_count_swapped_for_sum(spark, tmp_path):
+    """``count`` and ``sum(value)`` merge alike, so only the recorded
+    specs tell them apart: a restart that swaps one for the other on a
+    sink with committed partials raises instead of folding counts and
+    sums together."""
+    from confluent_kafka_vector_search_prompt_inference_spark.streaming.pipeline import agg_insert, read_agg
+
+    schema = "g string, value long"
+    src, sink, ckpt = (str(tmp_path / d) for d in ("src", "aggsink", "ckpt"))
+    rows = spark.createDataFrame([(f"g{i % 2}", i) for i in range(30)], schema)
+    rows.repartition(2).write.parquet(src)
+    stream = file_stream_reader(spark, src, rows.schema, max_files_per_trigger=1)
+    _drain(agg_insert(stream, sink, ckpt, group_cols=["g"],
+                      agg_exprs={"n": "count"}, trigger_once=True))
+    assert {r.g: r.n for r in read_agg(spark, sink).collect()} == {"g0": 15, "g1": 15}
+    spark.createDataFrame([("g0", 100), ("g1", 200)], schema).coalesce(1).write.mode(
+        "append"
+    ).parquet(src)
+    with pytest.raises(ValueError, match=r"'n': 'count'.*'n': 'sum\(value\)'"):
+        agg_insert(stream, sink, ckpt, group_cols=["g"],
+                   agg_exprs={"n": "sum(value)"}, trigger_once=True)
+
+
+def test_agg_insert_accepts_a_plan_recorded_without_specs(spark, tmp_path, events_dir):
+    """A sink whose plan was recorded before the specs were restarts with
+    the same group and merge columns, and folds its old partials."""
+    import json
+
+    from confluent_kafka_vector_search_prompt_inference_spark.streaming.pipeline import agg_insert, read_agg
+
+    src, schema, n = events_dir
+    stream = file_stream_reader(spark, src, schema, max_files_per_trigger=1)
+    sink, ckpt = str(tmp_path / "aggsink"), str(tmp_path / "ckpt")
+    _drain(agg_insert(stream, sink, ckpt, group_cols=["event_type"],
+                      agg_exprs={"n": "count"}, trigger_once=True))
+    plan_p = os.path.join(sink, "_merge_plan.json")
+    with open(plan_p, "w") as fh:
+        json.dump({"group_cols": ["event_type"], "merge": {"n": "sum"}}, fh)
+    _drain(agg_insert(stream, sink, ckpt, group_cols=["event_type"],
+                      agg_exprs={"n": "count"}, trigger_once=True))
     assert sum(r.n for r in read_agg(spark, sink).collect()) == n
 
 
@@ -3149,7 +3194,7 @@ def test_compact_sink_regenerates_base_ids_sidecar(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_exact_dedup_bloom_gate_lifecycle(spark, tmp_path):
+def test_exact_dedup_bloom_gate_lifecycle(spark, tmp_path, monkeypatch):
     """Round 10 bloom gate on dedup_insert: a pre-gate sink upgrades by
     one-time backfill, cross-epoch duplicates still drop through the
     gate, a committed epoch whose bloom delta is lost to a crash is
@@ -3161,6 +3206,7 @@ def test_exact_dedup_bloom_gate_lifecycle(spark, tmp_path):
 
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+    from confluent_kafka_vector_search_prompt_inference_spark.streaming import pipeline
     from confluent_kafka_vector_search_prompt_inference_spark.streaming.pipeline import (
         dedup_insert,
         enforce_retention_tombstoned,
@@ -3177,13 +3223,15 @@ def test_exact_dedup_bloom_gate_lifecycle(spark, tmp_path):
         spark.createDataFrame(rows, schema).coalesce(1).write.mode(
             "append"
         ).parquet(src)
-        q = dedup_insert(
-            file_stream_reader(spark, src, schema),
-            sink, str(tmp_path / "ckpt"),
-            key_expr=F.md5("text"), bucket_partitions=4, compact_every=1,
-            bloom_gate=gate, bloom_m_bits=m_bits, trigger_once=True,
-        )
-        _drain(q)
+        with monkeypatch.context() as m:
+            m.setattr(pipeline, "bloom_gate_auto_m_bits", lambda _d: m_bits)
+            q = dedup_insert(
+                file_stream_reader(spark, src, schema),
+                sink, str(tmp_path / "ckpt"),
+                key_expr=F.md5("text"), bucket_partitions=4, compact_every=1,
+                bloom_gate=gate, trigger_once=True,
+            )
+            _drain(q)
 
     def landed():
         return {r.doc_id for r in read_sink(spark, sink).collect()}
@@ -3220,8 +3268,8 @@ def test_exact_dedup_bloom_gate_lifecycle(spark, tmp_path):
     assert 9 not in after       # epsilon live -> still drops
     assert before - after == set()  # nothing else lost
 
-    # param change across runs: a different bloom_m_bits probes
-    # DIFFERENT bit positions, so the gate resets the dir (meta sidecar
+    # width change across runs (the store doubled): a different width
+    # probes DIFFERENT bit positions, so the gate resets the dir (meta sidecar
     # mismatch) and rebuilds from the sink instead of merging mixed
     # position spaces — the duplicate still drops
     run_batch([(10, "epsilon"), (11, "theta")], gate=True, m_bits=1 << 12)
@@ -3231,6 +3279,66 @@ def test_exact_dedup_bloom_gate_lifecycle(spark, tmp_path):
 
     with open(os.path.join(bloom_dir, "_bloom_meta.json")) as fh:
         assert _json.load(fh)["m_bits"] == 1 << 12
+
+
+def _xd_run(spark, tmp_path, name, rows, **kw):
+    """Append rows as one micro-batch file and drain a dedup_insert lane
+    (key: md5 of the text) over the named src, into the named sink."""
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    from confluent_kafka_vector_search_prompt_inference_spark.streaming.pipeline import dedup_insert
+
+    schema = StructType(
+        [StructField("doc_id", LongType()), StructField("text", StringType())]
+    )
+    src = str(tmp_path / f"{name}_src")
+    spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(src)
+    sink = str(tmp_path / f"{name}_sink")
+    _drain(dedup_insert(
+        file_stream_reader(spark, src, schema), sink, str(tmp_path / f"{name}_ckpt"),
+        key_expr=F.md5("text"), bucket_partitions=4, compact_every=1,
+        trigger_once=True, **kw,
+    ))
+    return sink
+
+
+def test_exact_dedup_bloom_gate_preserves_landed_set(spark, tmp_path):
+    """The exact lane through the shared gate lands the same rows as
+    without it: a within-batch duplicate and a cross-epoch re-delivery
+    drop either way, folded history (compact_every=1) included."""
+    batches = [
+        [(1, "alpha"), (2, "beta"), (3, "alpha")],
+        [(4, "gamma"), (5, "beta")],
+        [(6, "delta"), (7, "gamma")],
+    ]
+    sinks = {}
+    for gate in (True, False):
+        for rows in batches:
+            sinks[gate] = _xd_run(spark, tmp_path, f"xg{gate}", rows, bloom_gate=gate)
+    landed = {
+        gate: {r.doc_id for r in read_sink(spark, sink).collect()}
+        for gate, sink in sinks.items()
+    }
+    assert landed[True] == landed[False] == {1, 2, 4, 6}, landed
+    assert glob.glob(os.path.join(sinks[True], "_bloomgate", "_batch=*", "_SUCCESS"))
+    assert not os.path.isdir(os.path.join(sinks[False], "_bloomgate"))
+
+
+def test_exact_dedup_bloom_gate_survives_torn_pin(spark, tmp_path):
+    """A crash while the width pin was written leaves an empty
+    ``_bloom_meta.json``. The next gated batch reads it as a mismatch:
+    the gate resets, rebuilds from the sink, still drops the duplicate,
+    and leaves a valid pin — the lane is not wedged."""
+    import json
+
+    sink = _xd_run(spark, tmp_path, "torn", [(1, "alpha")], bloom_gate=True)
+    pin = os.path.join(sink, "_bloomgate", "_bloom_meta.json")
+    open(pin, "w").close()
+    _xd_run(spark, tmp_path, "torn", [(2, "alpha"), (3, "beta")], bloom_gate=True)
+    assert {r.doc_id for r in read_sink(spark, sink).collect()} == {1, 3}
+    with open(pin) as fh:
+        assert json.load(fh) == {"m_bits": 1 << 20, "k": 4}
+    assert not os.path.exists(pin + ".tmp")
 
 
 @pytest.mark.parametrize("prune", [True, None], ids=["pruned", "auto"])
@@ -3751,21 +3859,21 @@ def test_near_dedup_bloom_gate_heals_missing_delta(spark, tmp_path):
     assert landed == {1, 2}, landed
 
 
-def test_near_dedup_bloom_gate_meta_mismatch_resets(spark, tmp_path):
-    """A width change (auto-sizer crossing a power of two, or an explicit
-    override) must reset + rebuild the gate store — deltas built under
+def test_near_dedup_bloom_gate_meta_mismatch_resets(spark, tmp_path, monkeypatch):
+    """A width change (the auto-sizer crossing a power of two as the store
+    doubles) must reset + rebuild the gate store — deltas built under
     different (m_bits, k) probe different bits and merging them would
     manufacture false negatives."""
-    sink = _nd_run(
-        spark, tmp_path, "bm", [(1, _ND_BASE)], bloom_gate=True,
-        bloom_m_bits=1 << 20,
-    )
+    from confluent_kafka_vector_search_prompt_inference_spark.streaming import pipeline
+
+    monkeypatch.setattr(pipeline, "bloom_gate_auto_m_bits", lambda _d: 1 << 20)
+    sink = _nd_run(spark, tmp_path, "bm", [(1, _ND_BASE)], bloom_gate=True)
     # width changes: old deltas are untrustworthy, store resets, and the
     # near-copy of landed history still drops through the rebuilt gate
+    monkeypatch.setattr(pipeline, "bloom_gate_auto_m_bits", lambda _d: 1 << 21)
     _nd_run(
         spark, tmp_path, "bm",
         [(7, _ND_BASE.replace("quick", "swift"))], bloom_gate=True,
-        bloom_m_bits=1 << 21,
     )
     landed = {r.doc_id for r in read_sink(spark, sink).collect()}
     assert landed == {1}, landed
@@ -4177,7 +4285,7 @@ def test_mg_insert_grouped_maintains_per_domain_heavy_hitters(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_exact_dedup_disengaged_delta_respects_pinned_width(spark, tmp_path):
+def test_exact_dedup_disengaged_delta_respects_pinned_width(spark, tmp_path, monkeypatch):
     """The post-land bloom delta write is reachable with the gate
     DISENGAGED (bloom_gate=None, prune off, dir left by earlier gated
     batches). It must write at the dir's PINNED width, not a fresh auto
@@ -4189,6 +4297,7 @@ def test_exact_dedup_disengaged_delta_respects_pinned_width(spark, tmp_path):
 
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+    from confluent_kafka_vector_search_prompt_inference_spark.streaming import pipeline
     from confluent_kafka_vector_search_prompt_inference_spark.streaming.pipeline import dedup_insert
 
     schema = StructType(
@@ -4198,20 +4307,23 @@ def test_exact_dedup_disengaged_delta_respects_pinned_width(spark, tmp_path):
     sink = str(tmp_path / "sink")
     bloom_dir = os.path.join(sink, "_bloomgate")
 
-    def run_batch(rows, **kw):
+    def run_batch(rows, m_bits=None, **kw):
         spark.createDataFrame(rows, schema).coalesce(1).write.mode(
             "append"
         ).parquet(src)
-        q = dedup_insert(
-            file_stream_reader(spark, src, schema),
-            sink, str(tmp_path / "ckpt"),
-            key_expr=F.md5("text"), bucket_partitions=4,
-            compact_every=10**9, trigger_once=True, **kw,
-        )
-        _drain(q)
+        with monkeypatch.context() as m:
+            if m_bits is not None:
+                m.setattr(pipeline, "bloom_gate_auto_m_bits", lambda _d: m_bits)
+            q = dedup_insert(
+                file_stream_reader(spark, src, schema),
+                sink, str(tmp_path / "ckpt"),
+                key_expr=F.md5("text"), bucket_partitions=4,
+                compact_every=10**9, trigger_once=True, **kw,
+            )
+            _drain(q)
 
-    # epoch 0: gated at an explicit narrow width — pins m_bits=4096
-    run_batch([(1, "alpha")], bloom_gate=True, bloom_m_bits=1 << 12)
+    # epoch 0: gated at a narrow width — pins m_bits=4096
+    run_batch([(1, "alpha")], m_bits=1 << 12, bloom_gate=True)
     with open(os.path.join(bloom_dir, "_bloom_meta.json")) as fh:
         assert _json.load(fh)["m_bits"] == 1 << 12
 
@@ -4225,7 +4337,7 @@ def test_exact_dedup_disengaged_delta_respects_pinned_width(spark, tmp_path):
     # epoch 2: gate re-engages at the pinned width and probes the
     # merged deltas — epoch 1's key must be bloom-POSITIVE so its
     # duplicate drops (a foreign-width epoch-1 delta reads negative)
-    run_batch([(3, "beta"), (4, "gamma")], bloom_gate=True, bloom_m_bits=1 << 12)
+    run_batch([(3, "beta"), (4, "gamma")], m_bits=1 << 12, bloom_gate=True)
     landed = {r.doc_id for r in read_sink(spark, sink).collect()}
     assert landed == {1, 2, 4}, landed
 
@@ -4239,17 +4351,18 @@ def test_exact_dedup_disengaged_delta_respects_pinned_width(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_near_dedup_disengaged_delta_respects_pinned_width(spark, tmp_path):
+def test_near_dedup_disengaged_delta_respects_pinned_width(spark, tmp_path, monkeypatch):
     """near_dedup_insert's band-bucket-value gate: same pinned-width
     contract as the exact lane — a disengaged-gate batch's delta must
     write at the meta pin so a later gated batch's probe still sees its
     bucket values (advice r11, the near-dedup face)."""
     import json as _json
 
-    sink = _nd_run(
-        spark, tmp_path, "wpin", [(1, _ND_BASE)],
-        bloom_gate=True, bloom_m_bits=1 << 12,
-    )
+    from confluent_kafka_vector_search_prompt_inference_spark.streaming import pipeline
+
+    with monkeypatch.context() as m:
+        m.setattr(pipeline, "bloom_gate_auto_m_bits", lambda _d: 1 << 12)
+        sink = _nd_run(spark, tmp_path, "wpin", [(1, _ND_BASE)], bloom_gate=True)
     bg = os.path.join(sink, "_bloomgate")
     with open(os.path.join(bg, "_bloom_meta.json")) as fh:
         assert _json.load(fh)["m_bits"] == 1 << 12
@@ -4266,10 +4379,11 @@ def test_near_dedup_disengaged_delta_respects_pinned_width(spark, tmp_path):
     # gate re-engages at the pin: a near-copy of the DISENGAGED epoch's
     # doc must still be caught (its buckets probe positive)
     near = _ND_OTHER + " extra"
-    _nd_run(
-        spark, tmp_path, "wpin", [(3, near), (4, _ND_THIRD)],
-        bloom_gate=True, bloom_m_bits=1 << 12,
-    )
+    with monkeypatch.context() as m:
+        m.setattr(pipeline, "bloom_gate_auto_m_bits", lambda _d: 1 << 12)
+        _nd_run(
+            spark, tmp_path, "wpin", [(3, near), (4, _ND_THIRD)], bloom_gate=True,
+        )
     landed = {r.doc_id for r in read_sink(spark, sink).collect()}
     assert landed == {1, 2, 4}, landed
 

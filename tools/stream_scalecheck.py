@@ -220,25 +220,21 @@ def _near_dedup_rung(
     )
     m_auto = None
     if bloom:
-        # pre-land the gate bloom over the store's bucket VALUES with the
-        # SAME auto-sized width the writer will compute — a mismatched
-        # pre-land would reset + rebuild inside the timed window
-        from confluent_kafka_vector_search_prompt_inference_spark.operators.membership import bloom_build
-        from confluent_kafka_vector_search_prompt_inference_spark.streaming.pipeline import bloom_gate_auto_m_bits
+        # pre-land the gate bloom over the store's bucket VALUES through
+        # the lane's own gate, whose heal pins the SAME auto-sized width
+        # the writer will compute — a mismatched pre-land would reset +
+        # rebuild inside the timed window
+        from confluent_kafka_vector_search_prompt_inference_spark.streaming.pipeline import _BloomGate
 
-        m_auto = bloom_gate_auto_m_bits(buckets_dir)
-        bloom_build(
-            keyed.select(
+        gate = _BloomGate(
+            sink, "__bucket",
+            lambda spark, d: spark.read.parquet(d).select(
                 F.explode(
                     band_buckets(F.col("__minhash"), num_hashes=64, bands=16)
                 ).alias("__bucket")
-            ).dropDuplicates(["__bucket"]),
-            "__bucket", m_bits=m_auto, k=4,
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(sink, "_bloomgate", "_batch=-1")
+            ),
         )
-        with open(os.path.join(sink, "_bloomgate", "_bloom_meta.json"), "w") as fh:
-            json.dump({"m_bits": m_auto, "k": 4}, fh)
+        m_auto = gate.heal(spark)
 
     # --- fixed increment: fresh docs (seed 1) + 1% planted near-copies of
     # landed rows (seed 0 text of id mod rung, one token appended).
@@ -282,9 +278,6 @@ def _near_dedup_rung(
         # plus the bloom-positive bucket fraction. Wall time on warm
         # local disk underprices dir opens; an object store prices them
         # per request — the 100 TB lever the gate exists for.
-        from confluent_kafka_vector_search_prompt_inference_spark.operators.membership import bloom_contains
-        from confluent_kafka_vector_search_prompt_inference_spark.streaming.pipeline import _bloomgate_batch_reduced
-
         first = incoming.limit(inc_rows // n_batches)
         fsigs = minhash_signatures(first, "doc_id", "text", num_hashes=64)
         bvals = fsigs.select(
@@ -294,13 +287,7 @@ def _near_dedup_rung(
         ).dropDuplicates(["__bucket"]).persist()
         n_parts = bucket_store_partitions(buckets_dir, 64)
         ungated = bvals.select(F.pmod("__bucket", F.lit(n_parts))).distinct().count()
-        bl = _bloomgate_batch_reduced(
-            spark, os.path.join(sink, "_bloomgate"), bvals, "__bucket",
-            m_bits=m_auto, k=4,
-        )
-        pos = bloom_contains(
-            bl, bvals, "__bucket", m_bits=m_auto, k=4
-        ).filter("bloom_member").persist()
+        pos = gate.positive(spark, bvals).persist()
         gated = pos.select(F.pmod("__bucket", F.lit(n_parts))).distinct().count()
         mech = {
             "m_bits": m_auto,
@@ -474,8 +461,8 @@ def _exact_dedup_rung(
     per batch falls from ~|batch| to ~(re-deliveries + fp)."""
     from pyspark.sql import functions as F
 
-    from confluent_kafka_vector_search_prompt_inference_spark.operators.membership import bloom_build
     from confluent_kafka_vector_search_prompt_inference_spark.streaming.pipeline import (
+        _BloomGate,
         bucket_store_partitions,
         dedup_insert,
         file_stream_reader,
@@ -505,18 +492,11 @@ def _exact_dedup_rung(
     write_ids_sidecar(spark, sink, -1, ["__fp"])
     m_auto = None
     if bloom:
-        # (m_bits, k) must match what dedup_insert will compute — a
-        # mismatched pre-land would reset + rebuild inside the timed
-        # window (and a HARD mismatch would probe different bit
-        # positions); the shared auto-sizing helper guarantees agreement
-        from confluent_kafka_vector_search_prompt_inference_spark.streaming.pipeline import bloom_gate_auto_m_bits
-
-        m_auto = bloom_gate_auto_m_bits(buckets_dir)
-        bloom_build(keyed, "__fp", m_bits=m_auto, k=4).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(sink, "_bloomgate", "_batch=-1"))
-        with open(os.path.join(sink, "_bloomgate", "_bloom_meta.json"), "w") as fh:
-            json.dump({"m_bits": m_auto, "k": 4}, fh)
+        # pre-land through dedup_insert's own gate: its heal pins the
+        # (m_bits, k) the lane will compute — a mismatched pre-land would
+        # reset + rebuild inside the timed window
+        gate = _BloomGate(sink, "__fp", lambda spark, d: spark.read.parquet(d))
+        m_auto = gate.heal(spark)
 
     inc = spark.range(INCOMING_ROWS)
     fresh = _synth_docs(spark, INCOMING_ROWS, id_offset=_ID_OFFSET, seed=1)
@@ -550,11 +530,6 @@ def _exact_dedup_rung(
         # Wall time on local disk underprices this (dir opens are
         # ~free warm); an object store prices it per request, which is
         # the 100 TB lever the gate exists for.
-        from confluent_kafka_vector_search_prompt_inference_spark.operators.membership import (
-            bloom_contains,
-            bloom_needed_words,
-        )
-
         first = incoming.limit(INCOMING_ROWS // N_BATCHES).select(
             F.md5("text").alias("__fp")
         ).dropDuplicates(["__fp"])
@@ -562,16 +537,7 @@ def _exact_dedup_rung(
         ungated = (
             hashed.select(F.pmod("__bucket", F.lit(1024))).distinct().count()
         )
-        need = bloom_needed_words(hashed, "__fp", m_bits=m_auto, k=4)
-        bl = (
-            spark.read.parquet(os.path.join(sink, "_bloomgate", "_batch=-1"))
-            .join(F.broadcast(need), "word", "left_semi")
-            .groupBy("word")
-            .agg(F.bit_or("bits").alias("bits"))
-        )
-        pos = bloom_contains(
-            bl, hashed, "__fp", m_bits=m_auto, k=4
-        ).filter("bloom_member")
+        pos = gate.positive(spark, hashed)
         gated = (
             pos.select(F.pmod("__bucket", F.lit(1024))).distinct().count()
         )
